@@ -329,21 +329,7 @@ def cc_star(edges: DataFrame, nodes: DataFrame) -> tuple[DataFrame, int]:
     union needs NO distinct, and ``large`` flows to its two consumers
     undeduplicated — min() is duplicate-insensitive and the row volume
     is bounded by |s| (one output row per surviving s-row) until the
-    final distinct restores the set.
-
-    ``SPARK_GRAFT_CCSTAR_LEGACY=1`` restores the pre-trim loop (the
-    per-round re-symmetrization union + two distincts) — the r13 A/B
-    knob closing VERDICT r12 #3/#6: the trim landed in the interrupted
-    build round without an interleaved measurement and the headline
-    moved +17% (inside this query's documented ±6 s drift class); the
-    knob lets both arms run under one host weather. Values are
-    identical either way (min() is duplicate-insensitive; the final
-    distinct restores the set)."""
-    import os as _os
-
-    legacy = _os.environ.get("SPARK_GRAFT_CCSTAR_LEGACY", "").strip().lower() not in (
-        "", "0", "false", "no", "off",
-    )
+    final distinct restores the set."""
     sym = (
         edges.select(F.col("a").alias("child"), F.col("b").alias("parent"))
         .unionByName(
@@ -361,7 +347,7 @@ def cc_star(edges: DataFrame, nodes: DataFrame) -> tuple[DataFrame, int]:
         rounds += 1
         # large-star: group the SYMMETRIC adjacency by u; every strictly
         # larger neighbor re-points to m(u) = min(N(u) ∪ {u}).
-        if cur_symmetric and not legacy:
+        if cur_symmetric:
             s = cur
         else:
             s = cur.unionByName(
@@ -370,8 +356,6 @@ def cc_star(edges: DataFrame, nodes: DataFrame) -> tuple[DataFrame, int]:
                     F.col("child").alias("parent"),
                 )
             )
-            if legacy:
-                s = s.distinct()
         cur_symmetric = False
         mins = (
             s.groupBy("child")
@@ -383,8 +367,6 @@ def cc_star(edges: DataFrame, nodes: DataFrame) -> tuple[DataFrame, int]:
             .filter(F.col("parent") > F.col("child"))
             .select(F.col("parent").alias("child"), F.col("m").alias("parent"))
         )
-        if legacy:
-            large = large.distinct()
         # small-star: edges are now all child > parent; group by child,
         # re-point every parent (and the child itself) to the min parent.
         mins2 = large.groupBy("child").agg(F.min("parent").alias("m"))

@@ -17,8 +17,8 @@ JVM-side (functions/vectors.py) and bit-reproducible in the DuckDB oracle.
 
 from __future__ import annotations
 
+import functools
 import math
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -131,24 +131,63 @@ IVF_HIER_SUPER_PROBE = 2
 IVF_TRAIN_PER_CENT = 64
 
 
-def _rank_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
-    """row_number over (cosine desc, vec_id) per query; keep the top k."""
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
+def _rank_topk(
+    scored: DataFrame, k: int = TOP_K, score: str = "cosine", desc: bool = True
+) -> DataFrame:
+    """The per-query top-k tail every tier ends in: row_number over
+    (``score``, vec_id) per query — descending for similarities
+    (cosine), ascending (``desc=False``) for distances (adc_d2, d2,
+    hamming) — cast to bigint; keep the top ``k`` as (query_id, vec_id,
+    score, rank)."""
+    key = F.col(score).desc() if desc else F.col(score)
+    w = Window.partitionBy("query_id").orderBy(key, F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+        .select("query_id", "vec_id", score, "rank")
     )
 
 
-_SQL_RANK = f"""
-    SELECT query_id, vec_id, cosine, rank FROM (
-        SELECT query_id, vec_id, cosine,
+def _sql_rank(src: str = "scored", score: str = "cosine", desc: bool = True) -> str:
+    """DuckDB twin of _rank_topk: the final (query_id, vec_id, score,
+    rank) select over CTE ``src``."""
+    order = f"{score} DESC" if desc else score
+    return f"""
+    SELECT query_id, vec_id, {score}, rank FROM (
+        SELECT query_id, vec_id, {score},
                CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cosine DESC, vec_id) AS BIGINT) AS rank
-        FROM scored)
+                                       ORDER BY {order}, vec_id) AS BIGINT) AS rank
+        FROM {src})
     WHERE rank <= {TOP_K}
 """
+
+
+def _sql_score_pairs_cte(name: str, cand: str) -> str:
+    """DuckDB twin of _score_pairs: ``name`` AS the exact rounded cosine
+    of every (query_id, vec_id) pair in CTE ``cand``."""
+    return f"""
+    {name} AS (
+        SELECT c.query_id, c.vec_id,
+               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
+        FROM {cand} c
+        JOIN embeddings eq ON eq.vec_id = c.query_id
+        JOIN embeddings ev ON ev.vec_id = c.vec_id)"""
+
+
+def _sql_topk_cte(
+    name: str, src: str, order: str = "cosine DESC", k: int = TOP_K
+) -> str:
+    """``name`` AS the per-query top-``k`` (query_id, vec_id) of CTE
+    ``src`` under ORDER BY ``order``, vec_id — the ranked set a recall
+    report intersects with the exact one."""
+    return f"""
+    {name} AS (
+        SELECT query_id, vec_id FROM (
+            SELECT query_id, vec_id,
+                   row_number() OVER (PARTITION BY query_id
+                                      ORDER BY {order}, vec_id) AS rank
+            FROM {src})
+        WHERE rank <= {k})"""
 
 
 def _score_pairs(
@@ -196,7 +235,7 @@ def _score_pairs(
         SELECT q.query_id, v.vec_id,
                round({sql_cosine_pair('q.qe', 'v.embedding')}, 6) AS cosine
         FROM q JOIN embeddings v ON v.vec_id <> q.query_id)
-    {_SQL_RANK}
+    {_sql_rank()}
     """,
 )
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -465,13 +504,8 @@ def _sql_dyn_buckets_cte(tables: int, prefix: str) -> str:
           ON qb.table_idx = vb.table_idx AND qb.bucket = vb.bucket
          AND vb.vec_id <> qb.vec_id
         WHERE qb.vec_id < {N_QUERIES}),
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id)
-    {_SQL_RANK}
+    {_sql_score_pairs_cte('scored', 'cand')}
+    {_sql_rank()}
     """,
 )
 def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,13 +584,8 @@ def ann_lsh_topk(
         SELECT DISTINCT p.query_id, a.vec_id
         FROM probe p JOIN assign a ON a.cid = p.cid
         WHERE a.vec_id <> p.query_id),
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id)
-    {_SQL_RANK}
+    {_sql_score_pairs_cte('scored', 'cand')}
+    {_sql_rank()}
     """,
 )
 def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1016,7 +1045,7 @@ def kmeans_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT q.query_id, v.vec_id,
                round({sql_cosine_pair('q.qe', 'v.embedding')}, 6) AS cosine
         FROM q JOIN embeddings v ON v.vec_id <> q.query_id),
-    ranked AS ({_SQL_RANK}),
+    ranked AS ({_sql_rank()}),
     votes AS (
         SELECT r.query_id, e.label, count(*) AS votes
         FROM ranked r JOIN embeddings e ON e.vec_id = r.vec_id
@@ -1201,13 +1230,7 @@ _SQL_EXACT_TOPK_CTE = f"""
         SELECT q.query_id, v.vec_id,
                round({sql_cosine_pair('q.qe', 'v.embedding')}, 6) AS cosine
         FROM q JOIN embeddings v ON v.vec_id <> q.query_id),
-    topk_e AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_e)
-        WHERE rank <= {TOP_K})"""
+    {_sql_topk_cte('topk_e', 'scored_e')}"""
 
 _SQL_ANN_TOPK_CTE = f"""
     cand AS (
@@ -1216,19 +1239,8 @@ _SQL_ANN_TOPK_CTE = f"""
           ON qb.table_idx = vb.table_idx AND qb.bucket = vb.bucket
          AND vb.vec_id <> qb.vec_id
         WHERE qb.vec_id < {N_QUERIES}),
-    scored_a AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id),
-    topk_a AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_a)
-        WHERE rank <= {TOP_K})"""
+    {_sql_score_pairs_cte('scored_a', 'cand')},
+    {_sql_topk_cte('topk_a', 'scored_a')}"""
 
 
 # IVF top-k as a CTE chain ending in topk_i (mirrors similarity_ann_ivf).
@@ -1255,23 +1267,19 @@ _SQL_IVF_TOPK_CTE = f"""
         SELECT DISTINCT p.query_id, a.vec_id
         FROM probe p JOIN assign a ON a.cid = p.cid
         WHERE a.vec_id <> p.query_id),
-    scored_i AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand_i c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id),
-    topk_i AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_i)
-        WHERE rank <= {TOP_K})"""
+    {_sql_score_pairs_cte('scored_i', 'cand_i')},
+    {_sql_topk_cte('topk_i', 'scored_i')}"""
 
 
-def _sql_tier_recall(tier: str, topk: str) -> str:
-    return f"""
+def _sql_tier_recall(*tiers: tuple[str, str]) -> str:
+    """DuckDB twin of _tier_recall, closing a WITH list whose exact set
+    is ``topk_e``: the ``base`` (per-query n_exact) CTE, then one
+    (tier, query_id, n_exact, n_hits, recall) select per (tier, topk
+    CTE) pair, UNION ALL'd."""
+    return """
+    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
+             FROM topk_e GROUP BY query_id)""" + "\n    UNION ALL".join(
+        f"""
     SELECT '{tier}' AS tier, base.query_id, base.n_exact,
            CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
            round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / base.n_exact, 6)
@@ -1282,6 +1290,8 @@ def _sql_tier_recall(tier: str, topk: str) -> str:
             ON a.query_id = e.query_id AND a.vec_id = e.vec_id
           GROUP BY e.query_id) h
       ON h.query_id = base.query_id"""
+        for tier, topk in tiers
+    )
 
 
 @register(
@@ -1291,11 +1301,7 @@ def _sql_tier_recall(tier: str, topk: str) -> str:
     {_SQL_BUCKETS_CTE},
     {_SQL_ANN_TOPK_CTE},
     {_SQL_IVF_TOPK_CTE},
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('lsh', 'topk_a')}
-    UNION ALL
-    {_sql_tier_recall('ivf', 'topk_i')}
+    {_sql_tier_recall(('lsh', 'topk_a'), ('ivf', 'topk_i'))}
     """,
 )
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1311,33 +1317,44 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     one bucket join, one centroid probe) are exactly the plans being
     graded."""
     exact = similarity_topk(spark, sf_dir).select("query_id", "vec_id")
-    return _tier_recall(exact, "lsh", similarity_ann_lsh(spark, sf_dir)).unionByName(
-        _tier_recall(exact, "ivf", similarity_ann_ivf(spark, sf_dir))
+    return _tier_recall(
+        exact,
+        ("lsh", similarity_ann_lsh(spark, sf_dir)),
+        ("ivf", similarity_ann_ivf(spark, sf_dir)),
     )
 
 
 def _tier_recall(
-    exact: DataFrame, tier: str, ann: DataFrame, id_col: str = "query_id"
+    exact: DataFrame, *tiers: tuple[str, DataFrame], id_col: str = "query_id"
 ) -> DataFrame:
-    """Per-id recall of an approximate (id, vec_id) set against the exact
-    one: (tier, id, n_exact, n_hits, recall) — the rollup every recall
-    gauge (ANN demo + scaled, PQ, knn-graph) shares."""
+    """Per-id recall of each approximate (id, vec_id) set against the
+    exact one: (tier, id, n_exact, n_hits, recall) for every (tier, ann)
+    pair, unioned in argument order — the one rollup every recall gauge
+    (ANN demo + scaled, PQ, SQ8, IVFADC, Hamming, graph-beam,
+    Matryoshka, knn-graph) shares."""
     other = "dst" if id_col == "src" else "vec_id"
     base = exact.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_exact"))
-    hits = (
-        exact.join(ann.select(id_col, other), [id_col, other], "left_semi")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return base.join(hits, id_col, "left").select(
-        F.lit(tier).alias("tier"),
-        id_col,
-        "n_exact",
-        F.coalesce(F.col("n_hits"), F.lit(0).cast("bigint")).alias("n_hits"),
-        F.round(
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("double") / F.col("n_exact"),
-            6,
-        ).alias("recall"),
+
+    def one(tier: str, ann: DataFrame) -> DataFrame:
+        hits = (
+            exact.join(ann.select(id_col, other), [id_col, other], "left_semi")
+            .groupBy(id_col)
+            .agg(F.count(F.lit(1)).alias("n_hits"))
+        )
+        return base.join(hits, id_col, "left").select(
+            F.lit(tier).alias("tier"),
+            id_col,
+            "n_exact",
+            F.coalesce(F.col("n_hits"), F.lit(0).cast("bigint")).alias("n_hits"),
+            F.round(
+                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
+                / F.col("n_exact"),
+                6,
+            ).alias("recall"),
+        )
+
+    return functools.reduce(
+        DataFrame.unionByName, (one(tier, ann) for tier, ann in tiers)
     )
 
 
@@ -1447,14 +1464,8 @@ def _sql_multiprobe_ctes(
     "similarity_ann_lsh_multiprobe",
     oracle=f"""
     WITH {_sql_multiprobe_ctes()},
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6)
-                 AS cosine
-        FROM mpcand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id)
-    {_SQL_RANK}
+    {_sql_score_pairs_cte('scored', 'mpcand')}
+    {_sql_rank()}
     """,
 )
 def similarity_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1482,35 +1493,12 @@ def similarity_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame
         FROM mpq q JOIN mpbuckets b
           ON b.table_idx = q.table_idx AND b.bucket = q.base
         WHERE b.vec_id <> q.vec_id),
-    topk_sp AS (
-        SELECT query_id, vec_id FROM (
-            SELECT s.query_id, s.vec_id,
-                   row_number() OVER (PARTITION BY s.query_id
-                       ORDER BY s.cosine DESC, s.vec_id) AS rank
-            FROM (SELECT c.query_id, c.vec_id,
-                         round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6)
-                           AS cosine
-                  FROM sp_cand c
-                  JOIN embeddings eq ON eq.vec_id = c.query_id
-                  JOIN embeddings ev ON ev.vec_id = c.vec_id) s)
-        WHERE rank <= {TOP_K}),
-    topk_mp AS (
-        SELECT query_id, vec_id FROM (
-            SELECT s.query_id, s.vec_id,
-                   row_number() OVER (PARTITION BY s.query_id
-                       ORDER BY s.cosine DESC, s.vec_id) AS rank
-            FROM (SELECT c.query_id, c.vec_id,
-                         round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6)
-                           AS cosine
-                  FROM mpcand c
-                  JOIN embeddings eq ON eq.vec_id = c.query_id
-                  JOIN embeddings ev ON ev.vec_id = c.vec_id) s)
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('lsh_t1_single', 'topk_sp')}
-    UNION ALL
-    {_sql_tier_recall('lsh_t1_multiprobe', 'topk_mp')}
+    {_sql_score_pairs_cte('sp_scored', 'sp_cand')},
+    {_sql_score_pairs_cte('mp_scored', 'mpcand')},
+    {_sql_topk_cte('topk_sp', 'sp_scored')},
+    {_sql_topk_cte('topk_mp', 'mp_scored')},
+    {_sql_tier_recall(('lsh_t1_single', 'topk_sp'),
+                      ('lsh_t1_multiprobe', 'topk_mp'))}
     """,
 )
 def multiprobe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1529,9 +1517,7 @@ def multiprobe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, lsh_multiprobe_candidates(emb, LSH_PLANES, MP_TABLES, MP_PROBES)
         )
     )
-    return _tier_recall(exact, "lsh_t1_single", sp).unionByName(
-        _tier_recall(exact, "lsh_t1_multiprobe", mp)
-    )
+    return _tier_recall(exact, ("lsh_t1_single", sp), ("lsh_t1_multiprobe", mp))
 
 
 
@@ -1545,14 +1531,8 @@ MP_SCALED_TABLES = 8
     "similarity_ann_lsh_multiprobe_scaled",
     oracle=f"""
     WITH {_sql_multiprobe_ctes('mps', SCALED_LSH_PLANES, MP_SCALED_TABLES)},
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6)
-                 AS cosine
-        FROM mpscand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id)
-    {_SQL_RANK}
+    {_sql_score_pairs_cte('scored', 'mpscand')}
+    {_sql_rank()}
     """,
 )
 def similarity_ann_lsh_multiprobe_scaled(
@@ -2604,7 +2584,7 @@ def _sql_graph_beam_ctes(
     {_sql_knn_graph('', KNN_GRAPH_K)},
     {_sql_graph_beam_ctes()},
     scored AS (SELECT * FROM bv{BEAM_ROUNDS})
-    {_SQL_RANK}
+    {_sql_rank()}
     """,
 )
 def similarity_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2844,7 +2824,7 @@ def _sql_routed_entry_ctes(
     {_sql_routed_entry_ctes()},
     {_sql_beam_round_ctes()},
     scored AS (SELECT * FROM bv{BEAM_ROUNDS})
-    {_SQL_RANK}
+    {_sql_rank()}
     """,
 )
 def similarity_graph_beam_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2928,25 +2908,10 @@ def graph_beam_routed_entry_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     {_SQL_SIGN_CTES},
     {_sql_knn_graph('', KNN_GRAPH_K)},
     {_sql_graph_beam_ctes()},
-    topk_ent AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS rank
-            FROM bv0)
-        WHERE rank <= {TOP_K}),
-    topk_bm AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS rank
-            FROM bv{BEAM_ROUNDS})
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('entries_only', 'topk_ent')}
-    UNION ALL
-    {_sql_tier_recall('graph_beam', 'topk_bm')}
+    {_sql_topk_cte('topk_ent', 'bv0')},
+    {_sql_topk_cte('topk_bm', f'bv{BEAM_ROUNDS}')},
+    {_sql_tier_recall(('entries_only', 'topk_ent'),
+                      ('graph_beam', 'topk_bm'))}
     """,
 )
 def graph_beam_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2962,9 +2927,7 @@ def graph_beam_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = _exact_topk(spark, sf_dir).select("query_id", "vec_id")
     ent, beam, _ = graph_beam_topk(emb, graph)
-    return _tier_recall(exact, "entries_only", ent).unionByName(
-        _tier_recall(exact, "graph_beam", beam)
-    )
+    return _tier_recall(exact, ("entries_only", ent), ("graph_beam", beam))
 
 
 @register(
@@ -2976,25 +2939,10 @@ def graph_beam_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_sql_knn_graph('', KNN_GRAPH_K)},
     {_sql_routed_entry_ctes()},
     {_sql_beam_round_ctes()},
-    topk_ent AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS rank
-            FROM bv0)
-        WHERE rank <= {TOP_K}),
-    topk_bm AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS rank
-            FROM bv{BEAM_ROUNDS})
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('routed_entries_only', 'topk_ent')}
-    UNION ALL
-    {_sql_tier_recall('graph_beam_routed', 'topk_bm')}
+    {_sql_topk_cte('topk_ent', 'bv0')},
+    {_sql_topk_cte('topk_bm', f'bv{BEAM_ROUNDS}')},
+    {_sql_tier_recall(('routed_entries_only', 'topk_ent'),
+                      ('graph_beam_routed', 'topk_bm'))}
     """,
 )
 def graph_beam_routed_recall_report(
@@ -3021,8 +2969,8 @@ def graph_beam_routed_recall_report(
     )
     exact = _exact_topk(spark, sf_dir).select("query_id", "vec_id")
     ent, beam, _ = graph_beam_topk_routed(emb, graph, scored0=scored0)
-    return _tier_recall(exact, "routed_entries_only", ent).unionByName(
-        _tier_recall(exact, "graph_beam_routed", beam)
+    return _tier_recall(
+        exact, ("routed_entries_only", ent), ("graph_beam_routed", beam)
     )
 
 
@@ -3070,7 +3018,7 @@ def graph_index_write(emb: DataFrame, name: str = GRAPH_INDEX_TABLE) -> None:
     {_sql_knn_graph('', KNN_GRAPH_K)},
     {_sql_graph_beam_ctes()},
     scored AS (SELECT * FROM bv{BEAM_ROUNDS})
-    {_SQL_RANK}
+    {_sql_rank()}
     """,
 )
 def similarity_graph_beam_persisted(
@@ -3135,7 +3083,7 @@ def routed_artifacts_write(emb: DataFrame, name: str) -> None:
     {_sql_routed_entry_ctes()},
     {_sql_beam_round_ctes()},
     scored AS (SELECT * FROM bv{BEAM_ROUNDS})
-    {_SQL_RANK}
+    {_sql_rank()}
     """,
 )
 def similarity_graph_beam_routed_persisted(
@@ -3268,19 +3216,11 @@ def graph_index_append(
     # occupancy x tables — NOT the beam law _score_pairs' hint is
     # reserved for — so AQE picks the join strategy from runtime stats
     # (ADVICE r9).
-    scored = _score_pairs(emb, cand)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    fwd = (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").alias("src"),
-            F.col("vec_id").alias("dst"),
-            "cosine",
-            "rank",
-        )
+    fwd = _rank_topk(_score_pairs(emb, cand), k).select(
+        F.col("query_id").alias("src"),
+        F.col("vec_id").alias("dst"),
+        "cosine",
+        "rank",
     )
     # Reverse edges keep cosine (it is symmetric — the true pair value)
     # but carry rank = NULL: rank is a FORWARD-only contract (position in
@@ -3341,7 +3281,7 @@ _SQL_APPEND_GRAPH = f"""
     {_SQL_APPEND_GRAPH},
     {_sql_graph_beam_ctes(graph="graph_app")},
     scored AS (SELECT * FROM bv{BEAM_ROUNDS})
-    {_SQL_RANK}
+    {_sql_rank()}
     """,
 )
 def similarity_graph_beam_appended(
@@ -3416,6 +3356,20 @@ _SQL_PQ_CTES = f"""
         JOIN pq_qtab q ON q.sub_idx = c.sub_idx AND q.seed_id = c.code
         WHERE c.vec_id <> q.query_id
         GROUP BY q.query_id, c.vec_id)"""
+
+# Exact-L2 top-k truth over pq_ex's 1e4 micro-unit components — the
+# _exact_l2_topk mirror every quantized tier's recall is graded
+# against. Reads pq_ex (_SQL_PQ_CTES) and ends in topk_e.
+_SQL_EXACT_L2_TOPK_CTE = f"""
+    l2 AS (
+        SELECT q.vec_id AS query_id, v.vec_id,
+               CAST(sum((q.xq - v.xq) * (q.xq - v.xq)) AS BIGINT) AS d2
+        FROM pq_ex q JOIN pq_ex v
+          ON v.sub_idx = q.sub_idx AND v.pos = q.pos
+         AND v.vec_id <> q.vec_id
+        WHERE q.vec_id < {N_QUERIES}
+        GROUP BY 1, 2),
+    {_sql_topk_cte('topk_e', 'l2', 'd2')}"""
 
 
 def _pq_ex_frame(emb: DataFrame) -> DataFrame:
@@ -3502,6 +3456,67 @@ def _pq_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_pairs_frame(_pq_quantized(spark, sf_dir))
 
 
+def _pq_codes(pairs: DataFrame) -> DataFrame:
+    """(vec_id, sub_idx, code): the tie-broken argmin entry per
+    sub-vector of a (vec_id, sub_idx, seed_id, d2) pair frame — the
+    packed (d2, seed_id) min decoded back to its seed id."""
+    return pairs.groupBy("vec_id", "sub_idx").agg(
+        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
+            "code"
+        )
+    )
+
+
+def _pq_qtab(pairs: DataFrame, n_queries: int = N_QUERIES) -> DataFrame:
+    """(query_id, sub_idx, code, d2): the per-query ADC lookup table —
+    each query's exact sub-distance to every codebook entry."""
+    return pairs.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        "sub_idx",
+        F.col("seed_id").alias("code"),
+        "d2",
+    )
+
+
+def _pq_adc_topk(pairs: DataFrame) -> DataFrame:
+    """Un-routed ADC top-k over a PQ pair frame: stored codes join the
+    BROADCAST lookup table on (sub_idx, code), the per-(query, vec) sum
+    combines map-side, then the ascending-distance rank tail. The one
+    plan behind the sampled, trained and OPQ ADC tiers."""
+    adc = (
+        _pq_codes(pairs)
+        .join(F.broadcast(_pq_qtab(pairs)), ["sub_idx", "code"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
+    )
+    return _rank_topk(adc, score="adc_d2", desc=False)
+
+
+def _exact_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, vec_id): exact-L2 top-k over the 1e4 micro-unit
+    components — the truth every quantized tier's recall is graded
+    against (the metric ADC approximates, so a report measures pure
+    quantization loss). One quantized-component equi-join against the
+    {N_QUERIES}-row broadcast query set with a map-side integer sum;
+    mirrored by _SQL_EXACT_L2_TOPK_CTE."""
+    exq = _pq_quantized(spark, sf_dir).select("vec_id", "pos", "xq")
+    qside = exq.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "pos", F.col("xq").alias("qq")
+    )
+    l2 = (
+        exq.join(F.broadcast(qside), "pos")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(
+            F.sum((F.col("qq") - F.col("xq")) * (F.col("qq") - F.col("xq")))
+            .cast("bigint")
+            .alias("d2")
+        )
+    )
+    return _rank_topk(l2, score="d2", desc=False).select("query_id", "vec_id")
+
+
 def _pq_code_card(best: DataFrame) -> DataFrame:
     """(vec_id, pq_code, quant_mse) from a (vec_id, sub_idx, packed)
     argmin frame, with pq_code emitted as the '_'-joined code STRING
@@ -3582,13 +3597,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "similarity_pq_adc",
     oracle=f"""
     WITH {_SQL_PQ_CTES}
-    SELECT query_id, vec_id, adc_d2, rank FROM (
-        SELECT query_id, vec_id, adc_d2,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adc_d2, vec_id) AS BIGINT)
-                 AS rank
-        FROM adc)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('adc', 'adc_d2', desc=False)}
     """,
 )
 def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3606,30 +3615,7 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate — and the per-(query, vec) sum combines map-side; top-k
     per query is a window over each query's scored list. Cost per query
     tracks |V| code-lookups, not |V| x {EMB_DIM} float ops."""
-    pairs = _pq_pairs(spark, sf_dir)
-    codes = pairs.groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
-            "code"
-        )
-    )
-    qtab = pairs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        "sub_idx",
-        F.col("seed_id").alias("code"),
-        "d2",
-    )
-    adc = (
-        codes.join(F.broadcast(qtab), ["sub_idx", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "adc_d2", "rank")
-    )
+    return _pq_adc_topk(_pq_pairs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -3637,31 +3623,9 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pq_recall_report",
     oracle=f"""
     WITH {_SQL_PQ_CTES},
-    l2 AS (
-        SELECT q.vec_id AS query_id, v.vec_id,
-               CAST(sum((q.xq - v.xq) * (q.xq - v.xq)) AS BIGINT) AS d2
-        FROM pq_ex q JOIN pq_ex v
-          ON v.sub_idx = q.sub_idx AND v.pos = q.pos
-         AND v.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-        GROUP BY 1, 2),
-    topk_e AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY d2, vec_id) AS rank
-            FROM l2)
-        WHERE rank <= {TOP_K}),
-    topk_p AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_d2, vec_id) AS rank
-            FROM adc)
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('pq', 'topk_p')}
+    {_SQL_EXACT_L2_TOPK_CTE},
+    {_sql_topk_cte('topk_p', 'adc', 'adc_d2')},
+    {_sql_tier_recall(('pq', 'topk_p'))}
     """,
 )
 def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3678,43 +3642,8 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sum; both ranked lists are |Q| x {TOP_K} rows, so the
     intersection semi-join and rollup are trivia on top of the plans
     being graded."""
-    exq = _pq_quantized(spark, sf_dir).select("vec_id", "pos", "xq")
-    qside = exq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("xq").alias("qq")
-    )
-    l2 = (
-        exq.join(F.broadcast(qside), "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum((F.col("qq") - F.col("xq")) * (F.col("qq") - F.col("xq")))
-            .cast("bigint")
-            .alias("d2")
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-    exact = (
-        l2.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    adc = similarity_pq_adc(spark, sf_dir).select("query_id", "vec_id")
-    hits = (
-        exact.join(adc, ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return base.join(hits, "query_id", "left").select(
-        F.lit("pq").alias("tier"),
-        "query_id",
-        "n_exact",
-        F.coalesce(F.col("n_hits"), F.lit(0).cast("bigint")).alias("n_hits"),
-        F.round(
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-            / F.col("n_exact"),
-            6,
-        ).alias("recall"),
+    return _tier_recall(
+        _exact_l2_topk(spark, sf_dir), ("pq", similarity_pq_adc(spark, sf_dir))
     )
 
 
@@ -3745,19 +3674,8 @@ def _sql_lsh_topk_ctes(bprefix: str, suffix: str, k: int = TOP_K) -> str:
           ON qb.table_idx = vb.table_idx AND qb.bucket = vb.bucket
          AND vb.vec_id <> qb.vec_id
         WHERE qb.vec_id < {N_QUERIES}),
-    scored_{suffix} AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand_{suffix} c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id),
-    topk_{suffix} AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_{suffix})
-        WHERE rank <= {k})"""
+    {_sql_score_pairs_cte(f'scored_{suffix}', f'cand_{suffix}')},
+    {_sql_topk_cte(f'topk_{suffix}', f'scored_{suffix}', k=k)}"""
 
 
 def _sql_refined_cent_body(seed_sql: str, assign_extra: str = "") -> str:
@@ -3905,19 +3823,8 @@ def _sql_hier_topk_ctes(
         SELECT DISTINCT p.query_id, a.vec_id
         FROM probe_{suffix} p JOIN assign_{suffix} a ON a.cid = p.cid
         WHERE a.vec_id <> p.query_id),
-    scored_{suffix} AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand_{suffix} c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id),
-    topk_{suffix} AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_{suffix})
-        WHERE rank <= {k})"""
+    {_sql_score_pairs_cte(f'scored_{suffix}', f'cand_{suffix}')},
+    {_sql_topk_cte(f'topk_{suffix}', f'scored_{suffix}', k=k)}"""
 
 
 def _sql_ivf_refined_topk_ctes(nprobe: int, suffix: str, k: int = TOP_K) -> str:
@@ -3944,19 +3851,8 @@ def _sql_ivf_refined_topk_ctes(nprobe: int, suffix: str, k: int = TOP_K) -> str:
         SELECT DISTINCT p.query_id, a.vec_id
         FROM probe_{suffix} p JOIN assign_{suffix} a ON a.cid = p.cid
         WHERE a.vec_id <> p.query_id),
-    scored_{suffix} AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand_{suffix} c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id),
-    topk_{suffix} AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_{suffix})
-        WHERE rank <= {k})"""
+    {_sql_score_pairs_cte(f'scored_{suffix}', f'cand_{suffix}')},
+    {_sql_topk_cte(f'topk_{suffix}', f'scored_{suffix}', k=k)}"""
 
 
 @register(
@@ -3969,13 +3865,8 @@ def _sql_ivf_refined_topk_ctes(nprobe: int, suffix: str, k: int = TOP_K) -> str:
           ON qb.table_idx = vb.table_idx AND qb.bucket = vb.bucket
          AND vb.vec_id <> qb.vec_id
         WHERE qb.vec_id < {N_QUERIES}),
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM cand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id)
-    {_SQL_RANK}
+    {_sql_score_pairs_cte('scored', 'cand')}
+    {_sql_rank()}
     """,
 )
 def similarity_ann_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4002,13 +3893,7 @@ def similarity_ann_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_sql_refined_cent_cte_sqrt_sampled()},
     {_sql_hier_topk_ctes(SCALED_IVF_NPROBE, 'si')}
-    SELECT query_id, vec_id, cosine, rank FROM (
-        SELECT query_id, vec_id, cosine,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cosine DESC, vec_id) AS BIGINT)
-                 AS rank
-        FROM scored_si)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('scored_si')}
     """,
 )
 def similarity_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4041,11 +3926,8 @@ def similarity_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_sql_lsh_topk_ctes('s', 'sa')},
     {_sql_refined_cent_cte_sqrt_sampled()},
     {_sql_hier_topk_ctes(SCALED_IVF_NPROBE, 'si')},
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('lsh', 'topk_sa')}
-    UNION ALL
-    {_sql_tier_recall('ivf', 'topk_si')}
+    {_sql_tier_recall(('lsh', 'topk_sa'),
+                      ('ivf', 'topk_si'))}
     """,
 )
 def ann_recall_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4070,9 +3952,7 @@ def ann_recall_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_a, sup = ivf_trained_hier(emb)
     cand, _, _ = ivf_candidates_hier(emb, cent_a, sup, SCALED_IVF_NPROBE)
     ivf = _rank_topk(_score_pairs(emb, cand.select("query_id", "vec_id")))
-    return _tier_recall(exact, "lsh", lsh).unionByName(
-        _tier_recall(exact, "ivf", ivf)
-    )
+    return _tier_recall(exact, ("lsh", lsh), ("ivf", ivf))
 
 
 # ---------------------------------------------------------------------------
@@ -4296,7 +4176,7 @@ def ivf_trained_hier(
         F.col("ce").alias("se"),
         F.col("cn").alias("sn"),
     )
-    if eager and not os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
+    if eager:
         cent_a = materialize(_hier_cent_assigned(cent, sup))
         return cent_a, _sup_from_cent_a(cent_a)
     return _hier_cent_assigned(cent, sup), sup
@@ -4487,14 +4367,8 @@ def _sql_hier_ctes(
     "similarity_ann_ivf_hier",
     oracle=f"""
     WITH {_sql_hier_ctes()},
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6)
-                 AS cosine
-        FROM hs_cand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id)
-    {_SQL_RANK}
+    {_sql_score_pairs_cte('scored', 'hs_cand')}
+    {_sql_rank()}
     """,
 )
 def similarity_ann_ivf_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4518,30 +4392,14 @@ def similarity_ann_ivf_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SQL_EXACT_TOPK_CTE},
     {_sql_hier_ctes()},
-    scored_hh AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6)
-                 AS cosine
-        FROM hs_cand c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id),
-    topk_hh AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_hh)
-        WHERE rank <= {TOP_K}),
+    {_sql_score_pairs_cte('scored_hh', 'hs_cand')},
+    {_sql_topk_cte('topk_hh', 'scored_hh')},
     {_sql_refined_cent_cte_sqrt()},
     {_sql_ivf_refined_topk_ctes(SCALED_IVF_NPROBE, 'hf')},
     {_sql_ivf_refined_topk_ctes(IVF_HIER_SUPER_PROBE * SCALED_IVF_NPROBE, 'hm')},
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('ivf_flat', 'topk_hf')}
-    UNION ALL
-    {_sql_tier_recall('ivf_flat_matched', 'topk_hm')}
-    UNION ALL
-    {_sql_tier_recall('ivf_hier', 'topk_hh')}
+    {_sql_tier_recall(('ivf_flat', 'topk_hf'),
+                      ('ivf_flat_matched', 'topk_hm'),
+                      ('ivf_hier', 'topk_hh'))}
     """,
 )
 def ivf_hier_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4569,10 +4427,11 @@ def ivf_hier_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, cent, IVF_HIER_SUPER_PROBE * SCALED_IVF_NPROBE
     )
     hier = ann_ivf_hier_topk(emb)
-    return (
-        _tier_recall(exact, "ivf_flat", flat)
-        .unionByName(_tier_recall(exact, "ivf_flat_matched", flat_m))
-        .unionByName(_tier_recall(exact, "ivf_hier", hier))
+    return _tier_recall(
+        exact,
+        ("ivf_flat", flat),
+        ("ivf_flat_matched", flat_m),
+        ("ivf_hier", hier),
     )
 
 
@@ -4767,7 +4626,7 @@ def knn_graph_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         exact = ranked.filter(F.col("rank") <= k).select("src", "dst")
         gedges = graph.filter(F.col("src") < KNN_RECALL_SRCS)
-        out.append(_tier_recall(exact, tier, gedges, id_col="src"))
+        out.append(_tier_recall(exact, (tier, gedges), id_col="src"))
     return out[0].unionByName(out[1])
 
 
@@ -4788,7 +4647,7 @@ def knn_graph_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_sql_knn_graph('s', KNN_GRAPH_SCALED_K)},
     {_sql_graph_beam_ctes(graph="graph_sg", cent_mod=SCALED_IVF_CENT_MOD)},
     scored AS (SELECT * FROM bv{BEAM_ROUNDS})
-    {_SQL_RANK}
+    {_sql_rank()}
     """,
 )
 def similarity_graph_beam_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4816,25 +4675,10 @@ def similarity_graph_beam_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_SQL_SIGN_CTES},
     {_sql_knn_graph('s', KNN_GRAPH_SCALED_K)},
     {_sql_graph_beam_ctes(graph="graph_sg", cent_mod=SCALED_IVF_CENT_MOD)},
-    topk_ent AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS rank
-            FROM bv0)
-        WHERE rank <= {TOP_K}),
-    topk_bm AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id) AS rank
-            FROM bv{BEAM_ROUNDS})
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('entries_only_scaled', 'topk_ent')}
-    UNION ALL
-    {_sql_tier_recall('graph_beam_scaled', 'topk_bm')}
+    {_sql_topk_cte('topk_ent', 'bv0')},
+    {_sql_topk_cte('topk_bm', f'bv{BEAM_ROUNDS}')},
+    {_sql_tier_recall(('entries_only_scaled', 'topk_ent'),
+                      ('graph_beam_scaled', 'topk_bm'))}
     """,
 )
 def graph_beam_recall_report_scaled(
@@ -4847,8 +4691,8 @@ def graph_beam_recall_report_scaled(
     graph = materialize(knn_graph_edges_scaled(emb))
     exact = _exact_topk(spark, sf_dir).select("query_id", "vec_id")
     ent, beam, _ = graph_beam_topk(emb, graph, cent_mod=SCALED_IVF_CENT_MOD)
-    return _tier_recall(exact, "entries_only_scaled", ent).unionByName(
-        _tier_recall(exact, "graph_beam_scaled", beam)
+    return _tier_recall(
+        exact, ("entries_only_scaled", ent), ("graph_beam_scaled", beam)
     )
 
 
@@ -4912,9 +4756,7 @@ def _pq_refined_book_frame(ex: DataFrame) -> DataFrame:
     silently vanished, shrinking the trained book's width below the
     sampled book's (r5 ADVICE). Width parity is asserted in
     tests/test_pq_trained.py on a planted duplicate-seed corpus."""
-    codes0 = _pq_pairs_frame(ex).groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias("code")
-    )
+    codes0 = _pq_codes(_pq_pairs_frame(ex))
     agg = (
         ex.join(codes0, ["vec_id", "sub_idx"])
         .groupBy("sub_idx", F.col("code").alias("seed_id"), "pos")
@@ -4997,13 +4839,7 @@ def embedding_pq_codes_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     "similarity_pq_adc_trained",
     oracle=f"""
     WITH {_SQL_PQT_CTES}
-    SELECT query_id, vec_id, adc_d2, rank FROM (
-        SELECT query_id, vec_id, adc_d2,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adc_d2, vec_id) AS BIGINT)
-                 AS rank
-        FROM adc_t)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('adc_t', 'adc_d2', desc=False)}
     """,
 )
 def similarity_pq_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5012,61 +4848,16 @@ def similarity_pq_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored through their trained codes — identical lookup-join plan,
     better codebook. The recall delta over the sampled tier is the
     measured value of training (pq_recall_report_trained)."""
-    pairs = _pq_pairs_trained(spark, sf_dir)
-    codes = pairs.groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
-            "code"
-        )
-    )
-    qtab = pairs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        "sub_idx",
-        F.col("seed_id").alias("code"),
-        "d2",
-    )
-    adc = (
-        codes.join(F.broadcast(qtab), ["sub_idx", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "adc_d2", "rank")
-    )
+    return _pq_adc_topk(_pq_pairs_trained(spark, sf_dir))
 
 
 @register(
     "pq_recall_report_trained",
     oracle=f"""
     WITH {_SQL_PQT_CTES},
-    l2 AS (
-        SELECT q.vec_id AS query_id, v.vec_id,
-               CAST(sum((q.xq - v.xq) * (q.xq - v.xq)) AS BIGINT) AS d2
-        FROM pq_ex q JOIN pq_ex v
-          ON v.sub_idx = q.sub_idx AND v.pos = q.pos
-         AND v.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-        GROUP BY 1, 2),
-    topk_e AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY d2, vec_id) AS rank
-            FROM l2)
-        WHERE rank <= {TOP_K}),
-    topk_t AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_d2, vec_id) AS rank
-            FROM adc_t)
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('pq_trained', 'topk_t')}
+    {_SQL_EXACT_L2_TOPK_CTE},
+    {_sql_topk_cte('topk_t', 'adc_t', 'adc_d2')},
+    {_sql_tier_recall(('pq_trained', 'topk_t'))}
     """,
 )
 def pq_recall_report_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5074,28 +4865,10 @@ def pq_recall_report_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     justifies spending the Lloyd pass (tests/test_pq_trained.py asserts
     it strictly exceeds the sampled book's recall). Same exact-L2
     baseline, same trivia-sized intersection rollup."""
-    exq = _pq_quantized(spark, sf_dir).select("vec_id", "pos", "xq")
-    qside = exq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("xq").alias("qq")
+    return _tier_recall(
+        _exact_l2_topk(spark, sf_dir),
+        ("pq_trained", similarity_pq_adc_trained(spark, sf_dir)),
     )
-    l2 = (
-        exq.join(F.broadcast(qside), "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum((F.col("qq") - F.col("xq")) * (F.col("qq") - F.col("xq")))
-            .cast("bigint")
-            .alias("d2")
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-    exact = (
-        l2.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    adc = similarity_pq_adc_trained(spark, sf_dir).select("query_id", "vec_id")
-    return _tier_recall(exact, "pq_trained", adc)
 
 
 # ===========================================================================
@@ -5263,13 +5036,7 @@ _SQL_OPQ_ADC_CTES = (
     "similarity_pq_adc_opq",
     oracle=f"""
     WITH {_SQL_OPQ_ADC_CTES}
-    SELECT query_id, vec_id, adc_d2, rank FROM (
-        SELECT query_id, vec_id, adc_d2,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adc_d2, vec_id) AS BIGINT)
-                 AS rank
-        FROM adc_o)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('adc_o', 'adc_d2', desc=False)}
     """,
 )
 def similarity_pq_adc_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5281,35 +5048,14 @@ def similarity_pq_adc_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the folds run over. The MSE benefit (94% on planted anisotropy,
     tests/test_opq_alloc.py) carries directly into ADC distances since
     ADC error is exactly the quantization error of the stored side."""
-    pairs = _pq_pairs_trained_frame(
-        _opq_ex_frame(
-            load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", "embedding"
+    return _pq_adc_topk(
+        _pq_pairs_trained_frame(
+            _opq_ex_frame(
+                load_table(spark, sf_dir, "embeddings").select(
+                    "vec_id", "embedding"
+                )
             )
         )
-    )
-    codes = pairs.groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
-            "code"
-        )
-    )
-    qtab = pairs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        "sub_idx",
-        F.col("seed_id").alias("code"),
-        "d2",
-    )
-    adc = (
-        codes.join(F.broadcast(qtab), ["sub_idx", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "adc_d2", "rank")
     )
 
 
@@ -5347,12 +5093,7 @@ def _prefix_topk(emb: DataFrame, d: int, k: int = TOP_K) -> DataFrame:
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id")
-    )
+    return _rank_topk(scored, k).select("query_id", "vec_id")
 
 
 def _sql_prefix_topk(d: int, suffix: str) -> str:
@@ -5363,13 +5104,7 @@ def _sql_prefix_topk(d: int, suffix: str) -> str:
                  AS cosine
         FROM embeddings q JOIN embeddings v ON v.vec_id <> q.vec_id
         WHERE q.vec_id < {N_QUERIES}),
-    topk_{suffix} AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM scored_{suffix})
-        WHERE rank <= {TOP_K})"""
+    {_sql_topk_cte(f'topk_{suffix}', f'scored_{suffix}')}"""
 
 
 @register(
@@ -5378,11 +5113,8 @@ def _sql_prefix_topk(d: int, suffix: str) -> str:
     WITH {_SQL_EXACT_TOPK_CTE},
     {_sql_prefix_topk(MRL_DIMS[0], 'd16')},
     {_sql_prefix_topk(MRL_DIMS[1], 'd32')},
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('d16', 'topk_d16')}
-    UNION ALL
-    {_sql_tier_recall('d32', 'topk_d32')}
+    {_sql_tier_recall(('d16', 'topk_d16'),
+                      ('d32', 'topk_d32'))}
     """,
 )
 def matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5400,11 +5132,7 @@ def matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     width."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     exact = similarity_topk(spark, sf_dir).select("query_id", "vec_id")
-    out = None
-    for d in MRL_DIMS:
-        rep = _tier_recall(exact, f"d{d}", _prefix_topk(emb, d))
-        out = rep if out is None else out.unionByName(rep)
-    return out
+    return _tier_recall(exact, *((f"d{d}", _prefix_topk(emb, d)) for d in MRL_DIMS))
 
 
 # ===========================================================================
@@ -5521,13 +5249,7 @@ def embedding_sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM sq_r v JOIN sq_r q ON q.pos = v.pos AND q.vec_id <> v.vec_id
         WHERE q.vec_id < {N_QUERIES}
         GROUP BY 1, 2)
-    SELECT query_id, vec_id, adc_d2, rank FROM (
-        SELECT query_id, vec_id, adc_d2,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adc_d2, vec_id) AS BIGINT)
-                 AS rank
-        FROM sq_d2)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('sq_d2', 'adc_d2', desc=False)}
     """,
 )
 def similarity_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5556,12 +5278,7 @@ def similarity_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("adc_d2")
         )
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        d2.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "adc_d2", "rank")
-    )
+    return _rank_topk(d2, score="adc_d2", desc=False)
 
 
 @register(
@@ -5575,39 +5292,11 @@ def similarity_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM sq_r v JOIN sq_r q ON q.pos = v.pos AND q.vec_id <> v.vec_id
         WHERE q.vec_id < {N_QUERIES}
         GROUP BY 1, 2),
-    l2 AS (
-        SELECT q.vec_id AS query_id, v.vec_id,
-               CAST(sum((q.xq - v.xq) * (q.xq - v.xq)) AS BIGINT) AS d2
-        FROM sq_ex0 q JOIN sq_ex0 v
-          ON v.pos = q.pos AND v.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-        GROUP BY 1, 2),
-    topk_e AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY d2, vec_id) AS rank
-            FROM l2)
-        WHERE rank <= {TOP_K}),
-    topk_s AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_d2, vec_id) AS rank
-            FROM sq_d2)
-        WHERE rank <= {TOP_K}),
-    topk_p AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_d2, vec_id) AS rank
-            FROM adc_t)
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('sq8', 'topk_s')}
-    UNION ALL
-    {_sql_tier_recall('pq_trained', 'topk_p')}
+    {_SQL_EXACT_L2_TOPK_CTE},
+    {_sql_topk_cte('topk_s', 'sq_d2', 'adc_d2')},
+    {_sql_topk_cte('topk_p', 'adc_t', 'adc_d2')},
+    {_sql_tier_recall(('sq8', 'topk_s'),
+                      ('pq_trained', 'topk_p'))}
     """,
 )
 def sq8_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5617,30 +5306,10 @@ def sq8_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~lossless for ranking) while PQ trades recall for the 8x smaller
     index, and the right tier for a workload is read straight off this
     report. Rollups are |Q| x {TOP_K} trivia over the two tier plans."""
-    exq = _pq_quantized(spark, sf_dir).select("vec_id", "pos", "xq")
-    qside = exq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("xq").alias("qq")
-    )
-    l2 = (
-        exq.join(F.broadcast(qside), "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum((F.col("qq") - F.col("xq")) * (F.col("qq") - F.col("xq")))
-            .cast("bigint")
-            .alias("d2")
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-    exact = (
-        l2.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    sq8 = similarity_sq8_topk(spark, sf_dir).select("query_id", "vec_id")
-    pqt = similarity_pq_adc_trained(spark, sf_dir).select("query_id", "vec_id")
-    return _tier_recall(exact, "sq8", sq8).unionByName(
-        _tier_recall(exact, "pq_trained", pqt)
+    return _tier_recall(
+        _exact_l2_topk(spark, sf_dir),
+        ("sq8", similarity_sq8_topk(spark, sf_dir)),
+        ("pq_trained", similarity_pq_adc_trained(spark, sf_dir)),
     )
 
 
@@ -5693,29 +5362,13 @@ def ivfpq_adc_topk(
         cand, _, _ = ivf_candidates_hier(emb, cent, sup, nprobe, n_queries)
         cand = cand.select("query_id", "vec_id")
     pairs = _pq_pairs_trained_frame(_pq_ex_frame(emb))
-    codes = pairs.groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
-            "code"
-        )
-    )
-    qtab = pairs.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        "sub_idx",
-        F.col("seed_id").alias("code"),
-        "d2",
-    )
     adc = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(qtab), ["query_id", "sub_idx", "code"])
+        cand.join(_pq_codes(pairs), "vec_id")
+        .join(F.broadcast(_pq_qtab(pairs, n_queries)), ["query_id", "sub_idx", "code"])
         .groupBy("query_id", "vec_id")
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_d2", "rank")
-    )
+    return _rank_topk(adc, k, "adc_d2", desc=False)
 
 
 _IVFPQ_ADC_SQL = f"""
@@ -5723,13 +5376,7 @@ _IVFPQ_ADC_SQL = f"""
     {_sql_hier_topk_ctes(SCALED_IVF_NPROBE, 'ip')},
     {_SQL_PQT_CTES},
     {_SQL_IVFPQ_ADC_CTE}
-    SELECT query_id, vec_id, adc_d2, rank FROM (
-        SELECT query_id, vec_id, adc_d2,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adc_d2, vec_id) AS BIGINT)
-                 AS rank
-        FROM adc_ip)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('adc_ip', 'adc_d2', desc=False)}
     """
 
 
@@ -5773,31 +5420,9 @@ def similarity_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_sql_hier_topk_ctes(SCALED_IVF_NPROBE, 'ip')},
     {_SQL_PQT_CTES},
     {_SQL_IVFPQ_ADC_CTE},
-    l2 AS (
-        SELECT q.vec_id AS query_id, v.vec_id,
-               CAST(sum((q.xq - v.xq) * (q.xq - v.xq)) AS BIGINT) AS d2
-        FROM pq_ex q JOIN pq_ex v
-          ON v.sub_idx = q.sub_idx AND v.pos = q.pos
-         AND v.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-        GROUP BY 1, 2),
-    topk_e AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY d2, vec_id) AS rank
-            FROM l2)
-        WHERE rank <= {TOP_K}),
-    topk_ip2 AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_d2, vec_id) AS rank
-            FROM adc_ip)
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('ivfpq', 'topk_ip2')}
+    {_SQL_EXACT_L2_TOPK_CTE},
+    {_sql_topk_cte('topk_ip2', 'adc_ip', 'adc_d2')},
+    {_sql_tier_recall(('ivfpq', 'topk_ip2'))}
     """,
 )
 def ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5810,28 +5435,9 @@ def ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the routing share. tests/test_ivfpq.py asserts the composed tier's
     recall bar on a planted clustered corpus where neighbor geometry
     matches a real embedding corpus."""
-    exq = _pq_quantized(spark, sf_dir).select("vec_id", "pos", "xq")
-    qside = exq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("xq").alias("qq")
+    return _tier_recall(
+        _exact_l2_topk(spark, sf_dir), ("ivfpq", similarity_ivfpq_adc(spark, sf_dir))
     )
-    l2 = (
-        exq.join(F.broadcast(qside), "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum((F.col("qq") - F.col("xq")) * (F.col("qq") - F.col("xq")))
-            .cast("bigint")
-            .alias("d2")
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-    exact = (
-        l2.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    adc = similarity_ivfpq_adc(spark, sf_dir).select("query_id", "vec_id")
-    return _tier_recall(exact, "ivfpq", adc)
 
 
 # ===========================================================================
@@ -5960,11 +5566,7 @@ def ivfpq_adc_residual_topk(
     corpus_pairs = _pq_sub_arrays(res_ex).join(
         F.broadcast(book_arr), "sub_idx"
     ).select("vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2"))
-    codes = corpus_pairs.groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
-            "code"
-        )
-    )
+    codes = _pq_codes(corpus_pairs)
     q_res = _residual_ex(
         ex.filter(F.col("vec_id") < n_queries).withColumnRenamed(
             "vec_id", "query_id"
@@ -5998,12 +5600,7 @@ def ivfpq_adc_residual_topk(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_d2", "rank")
-    )
+    return _rank_topk(adc, k, "adc_d2", desc=False)
 
 
 # The residual CTE chain: rcent -> assignment/probe -> residual ex ->
@@ -6178,13 +5775,7 @@ def embedding_pq_codes_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVFPQ_RSD_SQL = f"""
     WITH {_SQL_RSD_CTES}
-    SELECT query_id, vec_id, adc_d2, rank FROM (
-        SELECT query_id, vec_id, adc_d2,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY adc_d2, vec_id) AS BIGINT)
-                 AS rank
-        FROM rsd_adc)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('rsd_adc', 'adc_d2', desc=False)}
     """
 
 
@@ -6210,40 +5801,11 @@ def similarity_ivfpq_adc_residual(spark: SparkSession, sf_dir: str) -> DataFrame
     {_sql_hier_topk_ctes(SCALED_IVF_NPROBE, 'ip')},
     {_SQL_PQT_CTES},
     {_SQL_IVFPQ_ADC_CTE},
-    l2 AS (
-        SELECT q.vec_id AS query_id, v.vec_id,
-               CAST(sum((q.xq - v.xq) * (q.xq - v.xq)) AS BIGINT) AS d2
-        FROM rsd_ex0 q JOIN rsd_ex0 v
-          ON v.sub_idx = q.sub_idx AND v.pos = q.pos
-         AND v.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-        GROUP BY 1, 2),
-    topk_e AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY d2, vec_id) AS rank
-            FROM l2)
-        WHERE rank <= {TOP_K}),
-    topk_raw AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_d2, vec_id) AS rank
-            FROM adc_ip)
-        WHERE rank <= {TOP_K}),
-    topk_rsd AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_d2, vec_id) AS rank
-            FROM rsd_adc)
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('ivfpq_raw', 'topk_raw')}
-    UNION ALL
-    {_sql_tier_recall('ivfpq_residual', 'topk_rsd')}
+    {_SQL_EXACT_L2_TOPK_CTE},
+    {_sql_topk_cte('topk_raw', 'adc_ip', 'adc_d2')},
+    {_sql_topk_cte('topk_rsd', 'rsd_adc', 'adc_d2')},
+    {_sql_tier_recall(('ivfpq_raw', 'topk_raw'),
+                      ('ivfpq_residual', 'topk_rsd'))}
     """,
 )
 def ivfpq_residual_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6253,32 +5815,10 @@ def ivfpq_residual_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing + code budget (VERDICT r6 #4). Same trivia-sized rollups as
     ann_recall_report; the expensive inputs are exactly the two tier
     plans being compared."""
-    exq = _pq_quantized(spark, sf_dir).select("vec_id", "pos", "xq")
-    qside = exq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "pos", F.col("xq").alias("qq")
-    )
-    l2 = (
-        exq.join(F.broadcast(qside), "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum((F.col("qq") - F.col("xq")) * (F.col("qq") - F.col("xq")))
-            .cast("bigint")
-            .alias("d2")
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "vec_id")
-    exact = (
-        l2.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    raw = similarity_ivfpq_adc(spark, sf_dir).select("query_id", "vec_id")
-    rsd = similarity_ivfpq_adc_residual(spark, sf_dir).select(
-        "query_id", "vec_id"
-    )
-    return _tier_recall(exact, "ivfpq_raw", raw).unionByName(
-        _tier_recall(exact, "ivfpq_residual", rsd)
+    return _tier_recall(
+        _exact_l2_topk(spark, sf_dir),
+        ("ivfpq_raw", similarity_ivfpq_adc(spark, sf_dir)),
+        ("ivfpq_residual", similarity_ivfpq_adc_residual(spark, sf_dir)),
     )
 
 
@@ -6407,11 +5947,7 @@ def vector_index_append(new_emb: DataFrame, name: str) -> None:
     pairs = _pq_sub_arrays(_pq_ex_frame(new_emb)).join(
         F.broadcast(stored_book), "sub_idx"
     ).select("vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2"))
-    codes = pairs.groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
-            "code"
-        )
-    )
+    codes = _pq_codes(pairs)
     codes_arr = codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub_idx", "code"))),
@@ -6475,12 +6011,7 @@ def vector_index_probe(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_d2", "rank")
-    )
+    return _rank_topk(adc, k, "adc_d2", desc=False)
 
 
 @register(
@@ -6774,11 +6305,7 @@ def vector_index_append_residual(new_emb: DataFrame, name: str) -> None:
     pairs = _pq_sub_arrays(res_ex).join(
         F.broadcast(stored_book), "sub_idx"
     ).select("vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2"))
-    codes = pairs.groupBy("vec_id", "sub_idx").agg(
-        (F.min(F.col("d2") * PQ_PACK + F.col("seed_id")) % PQ_PACK).alias(
-            "code"
-        )
-    )
+    codes = _pq_codes(pairs)
     codes_arr = codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub_idx", "code"))),
@@ -6849,12 +6376,7 @@ def vector_index_probe_residual(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_d2", "rank")
-    )
+    return _rank_topk(adc, k, "adc_d2", desc=False)
 
 
 @register("similarity_index_persisted_residual", oracle=_IVFPQ_RSD_SQL)
@@ -6936,12 +6458,7 @@ def hamming_topk(
         .cast("bigint")
         .alias("hamming"),
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "hamming", "rank")
-    )
+    return _rank_topk(scored, k, "hamming", desc=False)
 
 
 def _sql_hamming_scored() -> str:
@@ -6960,13 +6477,7 @@ def _sql_hamming_scored() -> str:
     oracle=f"""
     WITH {_SQL_SIGN_CTES},
     {_sql_hamming_scored()}
-    SELECT query_id, vec_id, hamming, rank FROM (
-        SELECT query_id, vec_id, hamming,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY hamming, vec_id) AS BIGINT)
-                 AS rank
-        FROM hscored)
-    WHERE rank <= {TOP_K}
+    {_sql_rank('hscored', 'hamming', desc=False)}
     """,
 )
 def similarity_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6996,20 +6507,10 @@ def hamming_rerank_topk(
     oracle=f"""
     WITH {_SQL_SIGN_CTES},
     {_sql_hamming_scored()},
-    hshort AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY hamming, vec_id) AS rank
-            FROM hscored)
-        WHERE rank <= {TOP_K * HAMMING_RERANK_FACTOR}),
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM hshort c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id)
-    {_SQL_RANK}
+    {_sql_topk_cte('hshort', 'hscored', 'hamming',
+                   k=TOP_K * HAMMING_RERANK_FACTOR)},
+    {_sql_score_pairs_cte('scored', 'hshort')}
+    {_sql_rank()}
     """,
 )
 def similarity_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7120,38 +6621,13 @@ def hard_negatives_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_SQL_EXACT_TOPK_CTE},
     {_SQL_SIGN_CTES},
     {_sql_hamming_scored()},
-    topk_h AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY hamming, vec_id) AS rank
-            FROM hscored)
-        WHERE rank <= {TOP_K}),
-    hshort AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY hamming, vec_id) AS rank
-            FROM hscored)
-        WHERE rank <= {TOP_K * HAMMING_RERANK_FACTOR}),
-    rr_scored AS (
-        SELECT c.query_id, c.vec_id,
-               round({sql_cosine_pair('eq.embedding', 'ev.embedding')}, 6) AS cosine
-        FROM hshort c
-        JOIN embeddings eq ON eq.vec_id = c.query_id
-        JOIN embeddings ev ON ev.vec_id = c.vec_id),
-    topk_rr AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, vec_id) AS rank
-            FROM rr_scored)
-        WHERE rank <= {TOP_K}),
-    base AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact
-             FROM topk_e GROUP BY query_id)
-    {_sql_tier_recall('hamming', 'topk_h')}
-    UNION ALL
-    {_sql_tier_recall('hamming_rerank', 'topk_rr')}
+    {_sql_topk_cte('topk_h', 'hscored', 'hamming')},
+    {_sql_topk_cte('hshort', 'hscored', 'hamming',
+                   k=TOP_K * HAMMING_RERANK_FACTOR)},
+    {_sql_score_pairs_cte('rr_scored', 'hshort')},
+    {_sql_topk_cte('topk_rr', 'rr_scored')},
+    {_sql_tier_recall(('hamming', 'topk_h'),
+                      ('hamming_rerank', 'topk_rr'))}
     """,
 )
 def hamming_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7163,8 +6639,10 @@ def hamming_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ann_recall_report's sibling for the compression-first stack)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     exact = similarity_topk(spark, sf_dir).select("query_id", "vec_id")
-    return _tier_recall(exact, "hamming", hamming_topk(emb)).unionByName(
-        _tier_recall(exact, "hamming_rerank", hamming_rerank_topk(emb))
+    return _tier_recall(
+        exact,
+        ("hamming", hamming_topk(emb)),
+        ("hamming_rerank", hamming_rerank_topk(emb)),
     )
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_spark.operators.artifacts import _env_on
 from mapreduce_spark.session import tune_session
 
 TABLE_NAMES = [
@@ -85,9 +86,7 @@ def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     spread fully — measured a win at every scale point."""
     import os
 
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT", "").strip().lower() not in (
-        "", "0", "false", "no", "off",
-    ):
+    if _env_on("SPARK_GRAFT_NO_FANOUT"):
         return df
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     want = parallelism

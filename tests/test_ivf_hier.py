@@ -220,3 +220,19 @@ def test_training_stride_law():
     # |S| x K at 1e9: (1e9 / stride) x (1e9 / cm) ~ 64 x 1e9 — linear
     k = 10**9 // ivf_cent_mod(10**9)
     assert (10**9 // big) * k <= 80 * 10**9
+
+
+def test_no_materialize_zero_keeps_eager_quantizer(spark, monkeypatch):
+    """SPARK_GRAFT_NO_MATERIALIZE=0 means OFF, so ``eager=True`` still
+    hands the trained quantizer to ``materialize`` (the one place the
+    knob is honored) instead of reading the raw variable's truthiness
+    and silently returning the lazy frames."""
+    from mapreduce_spark.operators import similarity
+
+    calls = []
+    monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "0")
+    monkeypatch.setattr(
+        similarity, "materialize", lambda df: calls.append(df) or df
+    )
+    similarity.ivf_trained_hier(_corpus(spark, 200), eager=True)
+    assert len(calls) == 1

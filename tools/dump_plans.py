@@ -7,11 +7,17 @@ The optimization-round evidence artifact: the judge checks plan claims
 Queries whose construction is execute-on-call (training loops, index
 writes) still produce a plan for the RETURNED DataFrame; the eager part
 is documented in OPTIMIZATION notes instead.
+
+Expression IDs (``#123``) and exchange/broadcast ids (``plan_id=45``) are
+session counters, not plan structure: they are masked to ``#x`` and
+``plan_id=x`` so dumps of the same plan taken in different sessions, or
+before and after a refactor, diff cleanly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -36,7 +42,8 @@ def main() -> int:
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)
-        plan = physical_plan(df)
+        plan = re.sub(r"#\d+", "#x", physical_plan(df))
+        plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
