@@ -12,6 +12,12 @@ basis is pinned in the JSON itself, not in prose. The best-of run is kept
 alongside under "queries_best" (r4/r5 records were best-of-3, so
 "value_best" is the key comparable to those rounds' headline totals).
 
+Per-query counts (sidecar only, under "query_counts"): the Spark jobs and
+the generated classes compiled (CodegenMetrics) across one query's
+construction plus its REPS timed runs. A warm query should compile 0
+classes and run no schema-inference job; a non-zero compile count means
+the generated-class cache is thrashing again (session.get_spark).
+
 Bisect knob: SPARK_GRAFT_BENCH_QUERIES="a,b,c" restricts the run to that
 subset (still warmup + median-of-5), so a session-pressure hypothesis can
 be tested by running a common subset alone in a fresh JVM vs inside the
@@ -220,7 +226,7 @@ def _calibration(spark) -> float:
 
 def main() -> int:
     from mapreduce_spark.registry import get_queries
-    from mapreduce_spark.session import get_spark
+    from mapreduce_spark.session import codegen_compiles, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -252,7 +258,12 @@ def main() -> int:
     # Python plan construction — the part that scales with data.
     medians: dict[str, float] = {}
     bests: dict[str, float] = {}
+    counts: dict[str, dict[str, int]] = {}
+    sc = spark.sparkContext
     for name in names:
+        group = f"bench:{name}"
+        sc.setJobGroup(group, name)
+        compiles = codegen_compiles(spark)
         df = None if name in EAGER_BUILD else qs[name](spark, sf_dir)
         samples = []
         for _ in range(REPS):
@@ -263,6 +274,12 @@ def main() -> int:
             samples.append(time.time() - t0)
         medians[name] = round(statistics.median(samples), 3)
         bests[name] = round(min(samples), 3)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        counts[name] = {
+            "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+            "codegen_compiles": codegen_compiles(spark) - compiles,
+        }
         # Artifact lifecycle (VERDICT r12 #8, OUTSIDE the timed section):
         # release the finished query's localCheckpoints so executor
         # storage stays bounded at ONE query's artifact sets instead of
@@ -296,7 +313,12 @@ def main() -> int:
     # on disk, and the LAST stdout line is a compact scalar summary that is
     # guaranteed to fit the capture window.
     here = os.path.dirname(os.path.abspath(__file__))
-    payload = {**summary, "queries": medians, "queries_best": bests}
+    payload = {
+        **summary,
+        "queries": medians,
+        "queries_best": bests,
+        "query_counts": counts,
+    }
     # Per-round sidecar (VERDICT r7 #7): BENCH_QUERIES.json is overwritten
     # every run, which already lost r6's per-query medians — so each run
     # ALSO writes BENCH_QUERIES_r{N}.json, with N inferred as the round

@@ -42,7 +42,7 @@ from mapreduce_spark.operators.textops import (
     sql_scrub,
 )
 from mapreduce_spark.registry import register
-from mapreduce_spark.sources.tables import load_table
+from mapreduce_spark.sources.tables import load_table, parquet_schema
 
 MIN_TOKENS = 5          # drop near-empty docs before scoring
 QUALITY_THRESHOLD = 0.6  # corpus median — the gate keeps the better half
@@ -1035,7 +1035,7 @@ def stream_export_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(src, dst)
         os.utime(dst, (time.time() - 600 + 300 * i,) * 2)
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

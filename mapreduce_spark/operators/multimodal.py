@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreduce_spark.registry import register
-from mapreduce_spark.sources.tables import fan_out, load_table
+from mapreduce_spark.sources.tables import fan_out, load_table, parquet_schema
 
 FRAME_BYTES = 16     # fake "frame" size for frame sampling
 FRAME_STRIDE = 4     # keep every 4th frame
@@ -996,7 +996,7 @@ def stream_cdc_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(src, dst)
         os.utime(dst, (time.time() - 600 + 300 * i,) * 2)
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -16,6 +16,7 @@ URI form so Spark reads/writes resolve them on the same filesystem.
 from __future__ import annotations
 
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -24,6 +25,21 @@ def _fs_and_path(spark: SparkSession, path: str):
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[attr-defined]
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[attr-defined]
     return fs, jpath
+
+
+class PathStatus(NamedTuple):
+    """What ``fs_status`` reports for one path."""
+
+    uri: str  # fully qualified: plain, ``file:`` and ``file://`` agree
+    mtime_ms: int
+    size: int
+
+
+def fs_status(spark: SparkSession, path: str) -> PathStatus:
+    """``FileSystem.getFileStatus`` of ``path`` on its own filesystem."""
+    fs, p = _fs_and_path(spark, path)
+    st = fs.getFileStatus(p)
+    return PathStatus(st.getPath().toString(), st.getModificationTime(), st.getLen())
 
 
 def warehouse_uri(spark: SparkSession) -> str:

@@ -7,15 +7,32 @@ live in sources/readers.py.
 
 Scale note: loaders return lazy DataFrames — predicate pushdown and column
 pruning reach the parquet scan because nothing here forces materialization.
+
+Schema memo: ``spark.read.parquet`` runs a Spark job just to read a
+file's footer schema, once per call. ``parquet_schema`` infers each
+source file's schema once per SparkContext and hands it to
+``spark.read.schema(...)`` afterwards, so a warm query launches no
+inference job. Only the schema is memoized, never a DataFrame: every
+``load_table`` call still returns a fresh relation (self-joins keep
+distinct expression ids). An entry is keyed on the qualified path and
+re-validated against the file's modification time and length on every
+call (``sources.fs.fs_status``), so a table rewritten in place is
+re-inferred; a rewrite that keeps both the length and the millisecond
+mtime is not seen.
 """
 
 from __future__ import annotations
 
+import weakref
+
 import pyspark.sql.functions as F
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from mapreduce_spark.operators.artifacts import _env_on
 from mapreduce_spark.session import tune_session
+from mapreduce_spark.sources.fs import PathStatus, fs_status
 
 TABLE_NAMES = [
     "region",
@@ -45,10 +62,35 @@ def _nanos_to_ts_ntz(col: str):
     ).alias(col)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table, normalizing nanos-timestamp columns to timestamp_ntz."""
+# SparkContext -> {qualified uri: (status at inference, schema)}. Two
+# threads missing on the same path both infer and store the same schema.
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkContext, dict[str, tuple[PathStatus, StructType]]
+] = weakref.WeakKeyDictionary()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The raw parquet schema of a source table file, inferred once per
+    session and re-inferred when the file's mtime or length changes (see
+    the module docstring). Tunes the session first: the inferred type of
+    a TIMESTAMP(NANOS) column depends on its confs."""
     tune_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    status = fs_status(spark, path)
+    memo = _SCHEMAS.setdefault(spark.sparkContext, {})
+    hit = memo.get(status.uri)
+    if hit is not None and hit[0] == status:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    memo[status.uri] = (status, schema)
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one table, normalizing nanos-timestamp columns to timestamp_ntz.
+    The schema comes from ``parquet_schema``, so only the first load of a
+    table file in a session runs an inference job."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     for col in _NANOS_COLS.get(name, []):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, _nanos_to_ts_ntz(col))
@@ -83,22 +125,16 @@ def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     perplexity/ann_lsh +1-1.5 s there while winning 2-6x at 25x) and the
     fan-out grows in with the data. Sites whose per-row work dwarfs any
     exchange (CDC chunk-hashing, span md5) pass no target and always
-    spread fully — measured a win at every scale point."""
-    import os
-
+    spread fully — measured a win at every scale point. Input bytes are
+    the Hadoop file lengths of ``df.inputFiles()`` (``sources.fs.fs_status``),
+    so the clamp works the same on every URI scheme."""
     if _env_on("SPARK_GRAFT_NO_FANOUT"):
         return df
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    want = parallelism
+    spark = df.sparkSession
+    want = spark.sparkContext.defaultParallelism
     if bytes_per_task:
-        try:
-            total = sum(
-                os.path.getsize(p.removeprefix("file:"))
-                for p in df.inputFiles()
-            )
-            want = min(parallelism, max(1, total // bytes_per_task))
-        except Exception:  # non-local paths: fall back to full spread
-            want = parallelism
+        total = sum(fs_status(spark, p).size for p in df.inputFiles())
+        want = min(want, max(1, total // bytes_per_task))
     if df.rdd.getNumPartitions() < want:
         return df.repartition(want)
     return df

@@ -34,7 +34,7 @@ from mapreduce_spark.operators.textops import (
     sql_scrub,
 )
 from mapreduce_spark.registry import register
-from mapreduce_spark.sources.tables import load_table
+from mapreduce_spark.sources.tables import load_table, parquet_schema
 
 SESSION_GAP_MIN = 30
 
@@ -42,8 +42,8 @@ SESSION_GAP_MIN = 30
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over events.parquet with the same nanos->ntz
     normalization as the batch loader (sources/tables.py)."""
-    batch = load_table(spark, sf_dir, "events")  # drives conf + final schema
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch = load_table(spark, sf_dir, "events")  # the normalized (final) schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # The file stream source requires a directory: stream the sf dir with a
     # glob filter selecting only the events table file(s).
     stream = (
@@ -335,8 +335,7 @@ def stream_text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local transform: no watermark, no state store, unbounded
     throughput; on a cluster the same plan runs off kafka with a parquet
     sink for a continuously-cleaned corpus."""
-    load_table(spark, sf_dir, "documents")  # tunes session conf
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     docs = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents*.parquet")
@@ -364,8 +363,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     borderline documents. Stateless per-row transform: no watermark, no
     state store; on a cluster this is the kafka -> parquet continuous
     curation gate."""
-    load_table(spark, sf_dir, "documents")  # tunes session conf
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     docs = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents*.parquet")
@@ -391,8 +389,7 @@ def stream_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode via the sorted-run fold): no watermark, no state store; on a
     cluster this is the kafka-side hard filter that drops junk before it
     ever reaches the expensive dedup/scoring stages."""
-    load_table(spark, sf_dir, "documents")  # tunes session conf
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     docs = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents*.parquet")
@@ -443,9 +440,9 @@ def stream_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_contamination_gate,
     )
 
-    batch_docs = load_table(spark, sf_dir, "documents")  # tunes session conf
+    batch_docs = load_table(spark, sf_dir, "documents")
     bench_sh = bench_shingles(batch_docs)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     docs = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents*.parquet")
@@ -518,7 +515,7 @@ def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_index_write(corpus, "neardup_gate_idx")
     index_bands, index_hashes = minhash_index_read(spark, "neardup_gate_idx")
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents*.parquet")
@@ -604,7 +601,7 @@ def stream_neardup_gate_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(src, dst)
         os.utime(dst, (time.time() - 600 + 300 * i,) * 2)
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -820,7 +817,7 @@ def stream_domain_mix_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     day the only non-row-local work is the tiny static rollup."""
     docs_static = load_table(spark, sf_dir, "documents")
     rates = _mix_rates(docs_static)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents*.parquet")
@@ -929,7 +926,7 @@ def stream_embdup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .saveAsTable("embdup_idx_vectors")
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/embeddings.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings*.parquet")
@@ -1094,7 +1091,7 @@ def stream_embdup_gate_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(src, dst)
         os.utime(dst, (time.time() - 600 + 300 * i,) * 2)
 
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/embeddings.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -8,9 +8,10 @@ Queries whose construction is execute-on-call (training loops, index
 writes) still produce a plan for the RETURNED DataFrame; the eager part
 is documented in OPTIMIZATION notes instead.
 
-Expression IDs (``#123``) and exchange/broadcast ids (``plan_id=45``) are
-session counters, not plan structure: they are masked to ``#x`` and
-``plan_id=x`` so dumps of the same plan taken in different sessions, or
+Expression IDs (``#123``), exchange/broadcast ids (``plan_id=45``) and the
+ids of checkpointed RDDs (``MapPartitionsRDD[24]``) are session counters,
+not plan structure: they are masked to ``#x``, ``plan_id=x`` and ``RDD[x]``
+so dumps of the same plan taken in different sessions, or
 before and after a refactor, diff cleanly.
 """
 
@@ -44,6 +45,7 @@ def main() -> int:
         df = qs[name](spark, SF_DIR)
         plan = re.sub(r"#\d+", "#x", physical_plan(df))
         plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
+        plan = re.sub(r"RDD\[\d+\]", "RDD[x]", plan)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
