@@ -621,21 +621,20 @@ def curation_pipeline_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-pass policy real pretraining dedup runs use (full transitive
     clustering is dedup_cluster's job).
 
-    Scale shape: identical to dedup_minhash_lsh's — signatures per-row
-    (one md5 per shingle), candidate generation a band-bucket equi-join
-    shuffling only (doc_id, band) keys, exact verify joins shingle sets
-    for candidates only, and the dominated set folds back as a LEFT ANTI
-    join on doc_id so document text never re-shuffles."""
+    Scale shape: dedup_minhash_lsh's pipeline (fingerprint_lsh_pairs)
+    over the shingle fingerprints of the gated, scrubbed text —
+    signatures per-row (one md5 per shingle), candidate generation a
+    capped band-bucket join shuffling only (doc_id, band) keys, exact
+    verify joins int64 fingerprint sets for candidates only — and the
+    dominated set folds back as a LEFT ANTI join on doc_id so document
+    text never re-shuffles."""
+    from mapreduce_spark.operators.artifacts import materialize
     from mapreduce_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
         N_BANDS,
         N_PERMS,
-        ROWS_PER_BAND,
-        _band_hash,
-        _minhash_sig,
-        base_hashes,
+        fingerprint_lsh_pairs,
+        shingle_hashes,
     )
-    from mapreduce_spark.functions.text import shingles
 
     docs = load_table(spark, sf_dir, "documents")
     clean = docs.select(
@@ -660,63 +659,18 @@ def curation_pipeline_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size(toks) >= MIN_TOKENS)
     gated = scored.filter(F.col("quality") >= QUALITY_THRESHOLD)
 
-    shx = gated.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        "quality",
-        F.array_distinct(shingles(tokens(F.col("clean_text")), 3)).alias("sgl"),
+    # materialized like dedup's fingerprint pass: the LSH pipeline reads
+    # the frame once per signature branch and verify side, and each lazy
+    # read would re-run the scrub and quality gate
+    hsf = materialize(
+        shingle_hashes(gated.select("doc_id", F.col("clean_text").alias("text")))
     )
-    hb = shx.filter(F.size("sgl") > 0).select(
-        "doc_id", "sgl", base_hashes(F.col("sgl")).alias("bs")
-    )
-    sig = hb.select(
-        "doc_id",
-        "sgl",
-        *[_minhash_sig(F.col("bs"), i).alias(f"sig{i}") for i in range(N_PERMS)],
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                _band_hash(
-                    [
-                        F.col(f"sig{i}")
-                        for i in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)
-                    ]
-                ).alias("band_hash"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = (
-        sig.select("doc_id", F.explode(band_structs).alias("bh"))
-        .select("doc_id", "bh.band_idx", "bh.band_hash")
-        .repartition("band_idx", "band_hash")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sa = shx.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = shx.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
     dominated = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(F.round(inter.cast("double") / union, 6) >= JACCARD_THRESHOLD)
+        fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
-    kept = shx.join(dominated, "doc_id", "left_anti")
+    kept = gated.join(dominated, "doc_id", "left_anti")
     return (
         kept.groupBy("source")
         .agg(
@@ -1234,15 +1188,9 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     member. Cost: the LSH pair pass (candidates via band buckets, never
     all-pairs) + two |docs|-row equi-joins on doc_id — the split frame
     is derived in-plan by the same zero-shuffle content hash."""
-    from mapreduce_spark.operators.dedup import (
-        N_BANDS,
-        N_PERMS,
-        _doc_shingles,
-        minhash_lsh_pairs,
-    )
+    from mapreduce_spark.operators.dedup import dedup_minhash_lsh
 
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    pairs = minhash_lsh_pairs(sh, N_PERMS, N_BANDS)
+    pairs = dedup_minhash_lsh(spark, sf_dir)
     splits = train_test_split(spark, sf_dir).select("doc_id", "split")
     sa = splits.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")

@@ -15,8 +15,30 @@ all-pairs cartesian — which is the property that survives 100 TB:
                            join -> exact cosine verification
 
 All hashing is md5-derived (functions/hashing.py) so a DuckDB oracle
-reproduces every signature bit-for-bit. All array math is JVM-side
-higher-order functions — no Python UDFs anywhere.
+reproduces every signature bit-for-bit. Array math is JVM-side
+higher-order functions; the one Python kernel is the Arrow-batched
+144-permutation signature fan-out (sig_array_np_from_bs).
+
+One shingle derivation: every MinHash, OPH and n-gram consumer reads the
+shingle-FINGERPRINT pass — ``shingle_hashes`` turns a (doc_id, text)
+frame into (doc_id, hs), the md5_long of each distinct 3-shingle, and
+``_doc_shingle_hashes`` materializes it once per query over the
+``documents`` table. Signatures derive as hs % P, inverted indexes key
+on hs, and exact-Jaccard verification (``_pair_jaccard``) intersects hs
+sets, which equals string-set Jaccard while md5_long is injective over
+the corpus's shingles (checked by tests/test_fingerprint_pass.py). The
+DuckDB oracles keep the literal string formulation as the independent
+reference. String shingles remain only where the value depends on the
+strings themselves:
+
+- the all-pairs prefix pair (``dedup_allpairs_prefix``,
+  ``allpairs_prefix_stats``): the prefix order ties on the shingle
+  string, and ``prefix_cand_pairs`` depends on that tie-break;
+- the persisted-index machinery (``minhash_index`` and its write,
+  probe and compact callers), which serves the index-lifecycle loop
+  unchanged;
+- the contamination and benchmark-shingle code, which matches against
+  a separately derived benchmark slice.
 """
 
 from __future__ import annotations
@@ -59,25 +81,41 @@ _SQL_SH_CTE = (
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sgl): the distinct STRING 3-shingles of every non-empty
+    document — only the all-pairs prefix pair reads these (see the
+    module docstring for why)."""
     # Small corpora arrive as one parquet split; fan out so the CPU-heavy
-    # shingle+hash work uses every core (sources.tables.fan_out — the
-    # r13-shared guard; no-op at multi-file scale).
+    # shingle work uses every core (no-op at multi-file scale).
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
+    ).filter(F.size("sgl") > 0)
+
+
+def shingle_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, hs: array<bigint>) from a lazy (doc_id, text) frame:
+    hs[i] is the md5_long fingerprint of the i-th distinct 3-shingle.
+    Documents without a shingle are dropped (the oracles' len(sgl) > 0)."""
+    return (
+        docs.select(
+            "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
+        )
+        .filter(F.size("sgl") > 0)
+        .select("doc_id", F.transform("sgl", md5_long).alias("hs"))
     )
 
 
 def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stored shingle-FINGERPRINT pass (guide §8, r13): one corpus
-    scan tokenizes, shingles and md5-hashes each document into
-    (doc_id, hs: array<bigint>) — hs[i] = md5_long(sgl[i]), the 60-bit
-    fingerprint per distinct shingle — materialized so the three plan
-    references every LSH tier makes (signature derivation + both
-    exact-verify sides) read the small int64 table instead of
-    re-running the tokenize/shingle/hash pass per reference and
-    shuffling fat string arrays through the verify joins (§2.3
-    "shuffle keys and metadata instead of payloads"; §3.3).
+    """The stored shingle-FINGERPRINT pass (guide §8): one corpus scan
+    tokenizes, shingles and md5-hashes each document into
+    (doc_id, hs: array<bigint>) — the 60-bit fingerprint per distinct
+    shingle — materialized so every plan reference a query makes
+    (signature derivation, inverted index, both exact-verify sides,
+    ground truth) reads the small int64 table instead of re-running the
+    tokenize/shingle/hash pass per reference and shuffling fat string
+    arrays through the verify joins (§2.3 "shuffle keys and metadata
+    instead of payloads"; §3.3). The scan is fanned out first: small
+    corpora arrive as one parquet split, and the hashing is CPU-heavy.
 
     Value preservation: signatures derive as hs % MINHASH_P — the exact
     per-element arithmetic ``base_hashes`` applies, same array order —
@@ -95,21 +133,43 @@ def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages (the dedup_index_persisted machinery stores exactly these
     hashes); in-session it is an executor-side localCheckpoint, rebuilt
     from parquet on every invocation (SPARK_GRAFT_NO_MATERIALIZE=1
-    restores the lazy 3-reference plan for A/B)."""
+    restores the lazy plan, one derivation per reference, for A/B)."""
     from mapreduce_spark.operators.artifacts import materialize
 
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
     return materialize(
-        sh.select("doc_id", F.transform("sgl", md5_long).alias("hs"))
+        shingle_hashes(fan_out(load_table(spark, sf_dir, "documents")))
     )
 
 
 def _bs_from_hs(hsf: DataFrame) -> DataFrame:
     """(doc_id, bs) from the fingerprint frame: bs = hs % P elementwise —
-    bit-identical to ``base_hashes`` on the string shingles."""
+    bit-identical to ``base_hashes`` on the string shingles, and the one
+    input every signature kernel reads."""
     return hsf.select(
         "doc_id",
         F.transform("hs", lambda h: h % F.lit(MINHASH_P)).alias("bs"),
+    )
+
+
+def _pair_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the exact set Jaccard, rounded to 6 dp
+    like every oracle, of each (doc_a, doc_b) candidate pair over a
+    two-column (doc_id, set) frame — the fingerprint frame's hs or, for
+    the all-pairs pair, the string shingles. The one verify join of the
+    family."""
+    doc, s = sets.columns
+    sa = sets.select(F.col(doc).alias("doc_a"), F.col(s).alias("set_a"))
+    sb = sets.select(F.col(doc).alias("doc_b"), F.col(s).alias("set_b"))
+    inter = F.size(F.array_intersect("set_a", "set_b"))
+    union = F.size("set_a") + F.size("set_b") - inter
+    return (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(inter.cast("double") / union, 6).alias("jaccard"),
+        )
     )
 
 
@@ -246,19 +306,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot bucket.
 
     One LSH pipeline serves every profile: this graded demo query IS
-    minhash_lsh_pairs under (N_PERMS, N_BANDS) — same signature code,
-    same band-key rule (_band_key_fn picks the packed encoding for the
-    2-row demo bands), same exchange-reuse pin on the bucket key.
+    fingerprint_lsh_pairs under (N_PERMS, N_BANDS) — same signature
+    entry point, same band-key rule (_band_key_fn picks the packed
+    encoding for the 2-row demo bands), same exchange-reuse pin on the
+    bucket key.
 
-    r13 (guide §8): the query now runs over the stored shingle-
-    FINGERPRINT pass (_doc_shingle_hashes) — ONE corpus
-    tokenize/shingle/hash scan materialized as (doc_id, hs int64[]),
-    feeding signatures (hs % P — bit-identical to base_hashes) and
-    both exact-verify sides (hash-set Jaccard == string Jaccard under
-    the injectivity checked at every graded SF). This supersedes the
-    r12-reverted STRING-frame checkpoint: what lost there was
-    serializing fat string arrays; the int64 fingerprint table is ~5x
-    narrower and the verify joins no longer ship strings at all."""
+    The query runs over the stored shingle-FINGERPRINT pass
+    (_doc_shingle_hashes) — ONE corpus tokenize/shingle/hash scan
+    materialized as (doc_id, hs int64[]), feeding signatures (hs % P —
+    bit-identical to base_hashes) and both exact-verify sides (hash-set
+    Jaccard == string Jaccard under the injectivity checked at every
+    graded SF). A checkpoint of the STRING shingle frame lost in an
+    A/B run: what lost was serializing fat string arrays; the int64
+    fingerprint table is ~5x narrower and the verify joins ship no
+    strings at all."""
     hsf = _doc_shingle_hashes(spark, sf_dir)
     return fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS)
 
@@ -292,9 +353,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, so ubiquitous shingles never fan out. Candidates found via
     shared RARE shingles are then verified with exact Jaccard over the
     FULL shingle sets. Pairs sharing only frequent shingles are skipped by
-    design — the standard recall/cost tradeoff, tuned by NGRAM_DF_MAX."""
-    sh = _doc_shingles(spark, sf_dir)
-    ex = sh.select("doc_id", F.explode("sgl").alias("s"))
+    design — the standard recall/cost tradeoff, tuned by NGRAM_DF_MAX.
+    The index keys on shingle fingerprints, so document frequencies and
+    pairs equal the oracle's string-keyed ones under md5_long
+    injectivity."""
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    ex = hsf.select("doc_id", F.explode("hs").alias("s"))
     rare = (
         ex.groupBy("s")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -311,20 +375,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= NGRAM_JACCARD_MIN)
-    )
+    return _pair_jaccard(pairs, hsf).filter(F.col("jaccard") >= NGRAM_JACCARD_MIN)
 
 
 # ---------------------------------------------------------------------------
@@ -1221,10 +1272,19 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is quadratic in per-shingle document frequency (no NGRAM_DF_MAX
     pruning — pruning is what the report must be able to indict). Run on
     a sample at 100 TB, like ann_recall_report."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    truth = exact_jaccard_truth(sh)
-    found = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    ct = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    return _recall_row(hsf, fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS))
+
+
+def _recall_row(hsf: DataFrame, found: DataFrame) -> DataFrame:
+    """The one-row (n_true, n_found, recall) rollup of an LSH tier's
+    verified pairs ``found`` against the exhaustive truth over the same
+    fingerprint frame. Found pairs are exact-verified, hence a subset of
+    truth, so counting both sides is the whole comparison; an empty
+    truth reads recall 1.0."""
+    ct = exact_jaccard_truth(hsf).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_true")
+    )
     cf = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found"))
     return ct.crossJoin(cf).select(
         "n_true",
@@ -1294,10 +1354,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     so downstream jobs (incremental dedup, cross-corpus joins, external
     ANN systems) never re-shingle the corpus. Bit-identical across
     engines (md5 base hash + integer permutations). Zero shuffles: pure
-    per-row array math fused into the scan."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    hb = sh.select("doc_id", base_hashes(F.col("sgl")).alias("bs"))
-    return hb.select(
+    per-row array math over the fingerprint pass."""
+    return _bs_from_hs(_doc_shingle_hashes(spark, sf_dir)).select(
         "doc_id",
         *[_minhash_sig(F.col("bs"), i).alias(f"sig{i}") for i in range(N_PERMS)],
     )
@@ -1386,8 +1444,8 @@ def _band_key_fn(rows_per_band: int):
     pair builder): bands of <= 2 rows pack collision-free into one
     BIGINT; wider bands md5-hash the signature tuple. One rule means a
     stored index and any same-profile query are always key-compatible
-    (r4 review finding: minhash_lsh_pairs used to hardcode the hashed
-    key, so its demo-profile buckets differed from minhash_index's)."""
+    (a pair builder that hardcoded the hashed key once produced
+    demo-profile buckets that differed from minhash_index's)."""
     return _band_hash if rows_per_band <= 2 else _hashed_band_key
 
 
@@ -1398,119 +1456,79 @@ def _sql_band_key(band: int, rows_per_band: int) -> str:
     return _sql_hashed_band_key(band, rows_per_band)
 
 
-def minhash_lsh_pairs(
-    sh: DataFrame,
-    n_perms: int,
-    n_bands: int,
-    threshold: float = JACCARD_THRESHOLD,
-    sig_fn=None,
-) -> DataFrame:
-    """Profile-parameterized MinHash LSH near-dup pairs over a
-    (doc_id, sgl) distinct-shingle frame: signatures -> hashed band keys
-    -> bucket equi-join -> exact-Jaccard verify >= threshold.
-
-    Candidates come from the CAPPED in-group enumeration (operators/
-    pairing.bucketed_pairs): buckets at healthy occupancy enumerate
-    inside their (band_idx, band_hash) group off one groupBy-collect
-    exchange — the r5 speed win over the band self-join that re-derived
-    the {n_perms}-permutation signature pipeline on both inputs
-    (measured 5.2 s -> 2.1 s at the production geometry, sf0.1) — while
-    buckets above BUCKET_CAP fall back to a salted self-join, because
-    AQE splits partitions, not aggregation groups: the uncapped r5 form
-    would materialize a 1e5-copy boilerplate bucket's 5e9 pairs inside
-    ONE group (VERDICT r5 #1). minhash_band_stats is the gauge that
-    prices the cap."""
-    return lsh_verified_pairs(
-        sh, minhash_bands(sh, n_perms, n_bands, sig_fn), threshold
-    )
-
-
 def fingerprint_lsh_pairs(
     hsf: DataFrame,
     n_perms: int,
     n_bands: int,
     threshold: float = JACCARD_THRESHOLD,
-    sig_fn=None,
 ) -> DataFrame:
-    """minhash_lsh_pairs over the stored shingle-fingerprint frame
-    (_doc_shingle_hashes): signatures and both verify sides read the
-    materialized (doc_id, hs) table — one corpus scan per query instead
-    of three, and the verify joins ship int64 arrays, not strings.
-    Values equal minhash_lsh_pairs' exactly (bs = hs % P elementwise ==
-    base_hashes; hash-set Jaccard == string Jaccard under injectivity —
-    see _doc_shingle_hashes)."""
-    sig_fn = sig_fn or sig_array_from_bs
-    bands = bands_from_sig(
-        sig_fn(_bs_from_hs(hsf), n_perms), n_bands, n_perms // n_bands
+    """Profile-parameterized MinHash LSH near-dup pairs over the
+    fingerprint frame (doc_id, hs): signatures -> band keys -> capped
+    bucket join -> exact-Jaccard verify >= threshold. Signatures and both
+    verify sides read the same (doc_id, hs) table, so a materialized
+    frame (_doc_shingle_hashes) is scanned, never re-derived, and the
+    verify joins ship int64 arrays, not strings.
+
+    Candidates come from the CAPPED in-group enumeration (operators/
+    pairing.bucketed_pairs): buckets at healthy occupancy enumerate
+    inside their (band_idx, band_hash) group off one groupBy-collect
+    exchange — measured 5.2 s -> 2.1 s at the production geometry,
+    sf0.1, against the band self-join that re-derived the signature
+    pipeline on both inputs — while buckets above BUCKET_CAP fall back
+    to a salted self-join, because AQE splits partitions, not
+    aggregation groups: the uncapped form would materialize a 1e5-copy
+    boilerplate bucket's 5e9 pairs inside ONE group. minhash_band_stats
+    is the gauge that prices the cap."""
+    return lsh_verified_pairs(
+        hsf, minhash_bands(hsf, n_perms, n_bands), threshold
     )
-    return lsh_verified_pairs(hsf, bands, threshold, set_col="hs")
 
 
 def lsh_verified_pairs(
-    sh: DataFrame,
-    bands: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    set_col: str = "sgl",
+    hsf: DataFrame, bands: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """Bucket-join + exact-Jaccard verify over an ARBITRARY
     (doc_id, band_idx, band_hash) band table — the candidate/verify tail
     every signature family (k-perm, OPH) shares, so the capped pairing
-    and verification semantics can never diverge between tiers.
-
-    ``set_col`` names the per-document set column Jaccard runs over:
-    ``sgl`` (string shingles — the oracle's literal formulation) or
-    ``hs`` (the 60-bit shingle fingerprints of _doc_shingle_hashes —
-    same set sizes and intersections under hash injectivity, but the
-    verify joins ship narrow int64 arrays instead of string arrays,
-    guide §2.3)."""
+    and verification semantics can never diverge between tiers. With
+    threshold 0 every candidate pair is kept (Jaccard is never
+    negative), which is what the candidate-precision gauges count."""
     pairs = bucketed_pairs(
         bands, ["band_idx", "band_hash"], "doc_id", "doc_a", "doc_b"
     ).dropDuplicates(["doc_a", "doc_b"])
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col(set_col).alias("set_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col(set_col).alias("set_b"))
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _pair_jaccard(pairs, hsf).filter(F.col("jaccard") >= threshold)
 
 
-def minhash_sig_array(sh: DataFrame, n_perms: int) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — the perm-ordered signature array
-    under an arbitrary profile, via the DATA PATH instead of n_perms
-    unrolled fold columns: explode each doc's base hashes, fan every
-    hash out to its n_perms permuted values through ONE small
-    coeff-array expression, partial-aggregate the per-(doc, perm) min
-    map-side, and reassemble. At the production 144-perm profile the
-    unrolled form cost ~3.5 s of Catalyst analysis + codegen PER PLAN
-    CONSTRUCTION, and a nested transform-of-transform array form
-    executed interpreted at ~5.5 s — the exploded form runs in
-    whole-stage codegen. Values are identical (min is order-independent;
-    per-perm arithmetic is unchanged). The size(sgl) > 0 guard mirrors
-    the oracles' len(sgl) > 0. The DEMO profile's derivation (12 perms
-    keep the fan-out cheap JVM-side); the production 144-perm profile
-    rides minhash_sig_array_np, pinned bit-identical below."""
-    return sig_array_from_bs(_bs_frame(sh), n_perms)
+# The exploded JVM kernel below serves the demo profile (8 permutations)
+# and the Arrow kernel the production profile (144): the exploded form
+# shuffles n_perms rows per base hash, which is the dominant stage at 144
+# permutations, while 8 do not pay for an Arrow crossing. No profile in
+# between is measured; the cut sits between the two that are.
+SIG_ARROW_MIN_PERMS = 32
 
 
-def _bs_frame(sh: DataFrame) -> DataFrame:
-    """(doc_id, bs) — 31-bit base hashes from a (doc_id, sgl) frame."""
-    return sh.filter(F.size("sgl") > 0).select(
-        "doc_id", base_hashes(F.col("sgl")).alias("bs")
-    )
+def signatures_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
+    """(doc_id, sig: array<bigint>) — the perm-ordered MinHash signature
+    of every (doc_id, bs) row under an arbitrary profile, the one entry
+    point every signature consumer calls. The kernel follows n_perms
+    (SIG_ARROW_MIN_PERMS); the two kernels are bit-identical, pinned
+    frame-for-frame by tests/test_bbit_minhash.py."""
+    if n_perms >= SIG_ARROW_MIN_PERMS:
+        return sig_array_np_from_bs(bsf, n_perms)
+    return sig_array_from_bs(bsf, n_perms)
 
 
 def sig_array_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
-    """minhash_sig_array's derivation from an already-hashed
-    (doc_id, bs: array<bigint>) base-hash frame — the entry point the
-    stored-fingerprint pass uses (bs = hs % P, no re-tokenization)."""
+    """The exploded JVM signature kernel: explode each doc's base
+    hashes, fan every hash out to its n_perms permuted values through
+    ONE small coeff-array expression, partial-aggregate the
+    per-(doc, perm) min map-side, and reassemble. Against n_perms
+    unrolled fold columns — ~3.5 s of Catalyst analysis + codegen PER
+    PLAN CONSTRUCTION at 144 perms — and a nested
+    transform-of-transform array form that executed interpreted at
+    ~5.5 s, the exploded form runs in whole-stage codegen. Values are
+    identical (min is order-independent; per-perm arithmetic is
+    unchanged)."""
     coeffs = "array(" + ", ".join(
         f"named_struct('p', {i}, 'a', {a}L, 'b', {b}L)"
         for i, (a, b) in ((i, _perm_coeffs(i)) for i in range(n_perms))
@@ -1538,15 +1556,12 @@ def sig_array_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
 MH_NP_SLAB = 1 << 16  # rows of the (hashes x perms) fan-out per slab
 
 
-def minhash_sig_array_np(sh: DataFrame, n_perms: int) -> DataFrame:
-    """minhash_sig_array computed as an Arrow-batched int64 fan-out
-    (mapInPandas) instead of the explode + per-(doc, perm) hash-agg
-    plan — bit-identical signatures: the md5 base hashes still derive
-    JVM-side from the exact expression the exploded form uses, and the
+def sig_array_np_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
+    """The Arrow signature kernel: sig_array_from_bs as an
+    Arrow-batched int64 fan-out (mapInPandas) instead of the explode +
+    per-(doc, perm) hash-agg plan — bit-identical signatures: the
     permutation is the same (a*h + b) mod P in exact int64 arithmetic
-    (a, h < P = 2^31-1 keeps a*h < 2^62). Pinned frame-for-frame
-    against minhash_sig_array at both graded profiles by
-    tests/test_bbit_minhash.py.
+    (a, h < P = 2^31-1 keeps a*h < 2^62).
 
     Why it exists: the exploded form shuffles |shingle hashes| x
     n_perms rows into the per-(doc, perm) min — at the production
@@ -1557,16 +1572,7 @@ def minhash_sig_array_np(sh: DataFrame, n_perms: int) -> DataFrame:
     Here the fan-out never leaves its partition: per document it is a
     (|bs| x n_perms) int64 broadcast product reduced along axis 0,
     sliced into <= MH_NP_SLAB-row slabs so a pathological
-    million-shingle document stays bounded-memory. The demo profile
-    keeps the exploded JVM form (12 permutations do not pay for an
-    Arrow crossing)."""
-    return sig_array_np_from_bs(_bs_frame(sh), n_perms)
-
-
-def sig_array_np_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
-    """minhash_sig_array_np's Arrow kernel from an already-hashed
-    (doc_id, bs) frame — sig_array_from_bs's production-profile twin,
-    the entry the stored-fingerprint pass feeds (bs = hs % P)."""
+    million-shingle document stays bounded-memory."""
     import numpy as np
     import pandas as pd
 
@@ -1596,20 +1602,14 @@ def sig_array_np_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
     )
 
 
-def minhash_bands(
-    sh: DataFrame, n_perms: int, n_bands: int, sig_fn=None
-) -> DataFrame:
-    """(doc_id, band_idx, band_hash) under an arbitrary profile — the
-    band table minhash_lsh_pairs buckets on and minhash_band_stats
-    audits (one builder so the gauge prices exactly the keys the dedup
-    tier joins on). Band keys derive from the signature arrays of
-    ``sig_fn`` (default minhash_sig_array; the scaled profile passes
-    minhash_sig_array_np — bit-identical, so band keys can never
-    diverge between derivations); a null band key must never form a
-    bucket (empty docs are filtered before signatures exist)."""
-    sig_fn = sig_fn or minhash_sig_array
+def minhash_bands(hsf: DataFrame, n_perms: int, n_bands: int) -> DataFrame:
+    """(doc_id, band_idx, band_hash) of a fingerprint frame under an
+    arbitrary profile — the band table fingerprint_lsh_pairs buckets on
+    and minhash_band_stats audits (one builder so the gauge prices
+    exactly the keys the dedup tier joins on). A null band key never
+    forms a bucket: empty documents have no fingerprint row."""
     return bands_from_sig(
-        sig_fn(sh, n_perms), n_bands, n_perms // n_bands
+        signatures_from_bs(_bs_from_hs(hsf), n_perms), n_bands, n_perms // n_bands
     )
 
 
@@ -1644,7 +1644,7 @@ def bands_from_sig(sig: DataFrame, n_bands: int, rpb: int) -> DataFrame:
 
 
 def _build_minhash_sql(n_perms: int, n_bands: int, threshold: float) -> str:
-    """DuckDB oracle for minhash_lsh_pairs under an arbitrary profile."""
+    """DuckDB oracle for fingerprint_lsh_pairs under an arbitrary profile."""
     rpb = n_perms // n_bands
     sig_sql = ", ".join(f"{_sql_minhash_sig(i)} AS sig{i}" for i in range(n_perms))
     bands_sql = ", ".join(
@@ -1693,31 +1693,27 @@ def dedup_minhash_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery. Runs over the stored fingerprint pass — one corpus scan,
     int64 verify (see dedup_minhash_lsh)."""
     hsf = _doc_shingle_hashes(spark, sf_dir)
-    return fingerprint_lsh_pairs(
-        hsf, SCALED_PERMS, SCALED_BANDS, sig_fn=sig_array_np_from_bs
-    )
+    return fingerprint_lsh_pairs(hsf, SCALED_PERMS, SCALED_BANDS)
 
 
-def exact_jaccard_truth(sh: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
-    """Exhaustive ground truth: every (doc_a < doc_b) pair with exact
-    shingle-Jaccard >= threshold, via an UNPRUNED inverted shingle index
-    (complete: any positive-Jaccard pair shares a shingle). Diagnostic
-    cost profile — quadratic in per-shingle document frequency."""
-    ex = sh.select("doc_id", F.explode("sgl").alias("s"))
+def exact_jaccard_truth(
+    hsf: DataFrame, threshold: float = JACCARD_THRESHOLD
+) -> DataFrame:
+    """Exhaustive ground truth over a fingerprint frame: every
+    (doc_a < doc_b) pair with exact shingle-Jaccard >= threshold, via an
+    UNPRUNED inverted shingle index (complete: any positive-Jaccard pair
+    shares a shingle). Diagnostic cost profile — quadratic in
+    per-shingle document frequency."""
+    ex = hsf.select("doc_id", F.explode("hs").alias("s"))
     a, b = ex.alias("a"), ex.alias("b")
     cand = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(F.round(inter.cast("double") / union, 6) >= threshold)
+        _pair_jaccard(cand, hsf)
+        .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b")
     )
 
@@ -1758,19 +1754,9 @@ def dedup_recall_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (>= 0.5) ground truth. This is the number the scaled profile's
     credibility rests on — asserted >= 0.9 in tests/test_dedup_scaled.py.
     Diagnostic path, like dedup_recall_report: run on a sample at 100 TB."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    truth = exact_jaccard_truth(sh)
-    found = minhash_lsh_pairs(
-        sh, SCALED_PERMS, SCALED_BANDS, sig_fn=minhash_sig_array_np
-    ).select("doc_a", "doc_b")
-    ct = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    cf = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found"))
-    return ct.crossJoin(cf).select(
-        "n_true",
-        "n_found",
-        F.when(F.col("n_true") == 0, F.lit(1.0))
-        .otherwise(F.round(F.col("n_found").cast("double") / F.col("n_true"), 6))
-        .alias("recall"),
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    return _recall_row(
+        hsf, fingerprint_lsh_pairs(hsf, SCALED_PERMS, SCALED_BANDS)
     )
 
 
@@ -1782,25 +1768,9 @@ def dedup_recall_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is exact-verified); candidate precision is what sets the verify bill.
 
 
-def _candidate_precision(
-    sh: DataFrame, n_perms: int, n_bands: int, sig_fn=None
-) -> DataFrame:
+def _candidate_precision(hsf: DataFrame, n_perms: int, n_bands: int) -> DataFrame:
     """(n_candidates, n_verified, precision) for one band profile."""
-    bands = minhash_bands(sh, n_perms, n_bands, sig_fn)
-    cand = bucketed_pairs(
-        bands, ["band_idx", "band_hash"], "doc_id", "doc_a", "doc_b"
-    ).dropDuplicates(["doc_a", "doc_b"])
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
-    j = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            F.round(inter.cast("double") / union, 6).alias("jaccard")
-        )
-    )
+    j = lsh_verified_pairs(hsf, minhash_bands(hsf, n_perms, n_bands), 0.0)
     return j.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
         F.sum(
@@ -1851,8 +1821,9 @@ def dedup_precision_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade is recall (dedup_recall_report, wants more bands) against this
     number (wants fewer) — together they price a band-count change
     BEFORE a 100 TB run commits to it."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    return _candidate_precision(sh, N_PERMS, N_BANDS)
+    return _candidate_precision(
+        _doc_shingle_hashes(spark, sf_dir), N_PERMS, N_BANDS
+    )
 
 
 @register(
@@ -1866,9 +1837,8 @@ def dedup_precision_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame
     exists to watch; tests/test_dedup_scaled.py pins that every emitted
     near-dup pair is still exact-verified (output precision 1.0) while
     candidate precision is strictly measured here."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
     return _candidate_precision(
-        sh, SCALED_PERMS, SCALED_BANDS, sig_fn=minhash_sig_array_np
+        _doc_shingle_hashes(spark, sf_dir), SCALED_PERMS, SCALED_BANDS
     )
 
 
@@ -2029,7 +1999,7 @@ def minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     here is the pair-explosion a 100 TB dedup run must see BEFORE the
     bucket join launches (boilerplate shingles, empty-ish docs), and the
     fix — shingle-DF pruning or band-key salting — is decided off this
-    table. Audits EXACTLY the keys minhash_lsh_pairs buckets on
+    table. Audits EXACTLY the keys fingerprint_lsh_pairs buckets on
     (minhash_bands is the shared builder).
 
     Plan shape: the signature data path (one md5 per shingle, then the
@@ -2037,9 +2007,8 @@ def minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation), a (band, key) partial-agg shuffle, then a
     {SCALED_BANDS}-row rollup — strictly cheaper than the join it
     prices."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
     per = (
-        minhash_bands(sh, SCALED_PERMS, SCALED_BANDS, minhash_sig_array_np)
+        minhash_bands(_doc_shingle_hashes(spark, sf_dir), SCALED_PERMS, SCALED_BANDS)
         .groupBy("band_idx", "band_hash")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -2083,8 +2052,9 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one shingle pass, one s-keyed groupBy (map-side
     combined), one equi-join back on s, one doc_id rollup — at 100 TB
     every stage keys on the shingle hash or doc_id, nothing quadratic."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    ex = sh.select("doc_id", F.explode("sgl").alias("s"))
+    ex = _doc_shingle_hashes(spark, sf_dir).select(
+        "doc_id", F.explode("hs").alias("s")
+    )
     firsts = ex.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     per = (
         ex.join(firsts, "s")
@@ -2291,10 +2261,11 @@ def minhash_bbit_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips it), so nothing beyond the deliberate b-bit truncation
     is lost; bbit_jaccard_report grades what the truncation costs as an
     estimator. Zero shuffles: the Arrow-batched signature fan-out
-    (minhash_sig_array_np) and the packing both stay inside the scan's
-    partitions."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    sig = minhash_sig_array_np(sh, SCALED_PERMS)
+    (sig_array_np_from_bs) and the packing both stay inside the
+    fingerprint frame's partitions."""
+    sig = signatures_from_bs(
+        _bs_from_hs(_doc_shingle_hashes(spark, sf_dir)), SCALED_PERMS
+    )
     # '_'-joined word string, not an array: the driver's pandas
     # canonicalizer cannot sort array cells (CORRECTNESS_r07 ERR class);
     # the encoding is bijective (split('_') recovers the words).
@@ -2374,14 +2345,13 @@ def bbit_jaccard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two {SCALED_PERMS}-long arrays — nothing pairwise beyond the
     candidates LSH already admitted.
 
-    r13: rides the stored fingerprint pass (_doc_shingle_hashes) — the
-    old plan re-derived the corpus SIX times (the LSH trio's three
-    references plus both {SCALED_PERMS}-perm signature sides); now one
-    materialized scan feeds all six (same values — see
+    Rides the stored fingerprint pass (_doc_shingle_hashes): one
+    materialized scan feeds the LSH trio's three references and both
+    {SCALED_PERMS}-perm signature sides (same values — see
     dedup_minhash_lsh)."""
     hsf = _doc_shingle_hashes(spark, sf_dir)
     pairs = fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS)
-    sig = sig_array_np_from_bs(_bs_from_hs(hsf), SCALED_PERMS)
+    sig = signatures_from_bs(_bs_from_hs(hsf), SCALED_PERMS)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
     agree_full = F.aggregate(
@@ -2443,10 +2413,11 @@ OPH_C = MINHASH_P // OPH_BINS + 1  # per-step borrow offset > max bin value
 OPH_BIGC = 1 << 34               # (distance, value) argmin packing
 
 
-def _oph_entries(sh: DataFrame) -> DataFrame:
-    """(doc_id, pe): per document, the POPULATED bins as packed
-    bin * 2^31 + min_value entries (sorted by bin). One md5 per shingle
-    — the entire hashing bill.
+def _oph_entries_from_bs(bsf: DataFrame) -> DataFrame:
+    """(doc_id, pe) from a (doc_id, bs) base-hash frame: per document,
+    the POPULATED bins as packed bin * 2^31 + min_value entries (sorted
+    by bin). One md5 per shingle — the entire hashing bill, paid by the
+    fingerprint pass.
 
     Row-local by design (perf, round 9): packing (bin, value) into one
     BIGINT makes array_sort order by (bin, then value), so "min value
@@ -2456,12 +2427,6 @@ def _oph_entries(sh: DataFrame) -> DataFrame:
     pe but paid two shuffles, and because every LSH consumer re-derives
     the signature on both sides of its joins, those shuffles ran 3-4x
     per query (27 s vs 3 s at sf0.1 for dedup_minhash_lsh_oph)."""
-    return _oph_entries_from_bs(_bs_frame(sh))
-
-
-def _oph_entries_from_bs(bsf: DataFrame) -> DataFrame:
-    """_oph_entries from an already-hashed (doc_id, bs) frame — the
-    entry the stored-fingerprint pass feeds (bs = hs % P)."""
     return (
         bsf.select("doc_id", F.col("bs").alias("hs"))
         .select(
@@ -2548,15 +2513,10 @@ def oph_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     the COMMON path, not an edge case; every signature slot is always
     defined (pinned in tests/test_oph.py). oph_jaccard_report grades
     the estimator these signatures carry."""
-    ent = _oph_entries(
-        _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    )
+    sig = _oph_sig_from_bs(_bs_from_hs(_doc_shingle_hashes(spark, sf_dir)))
     # '_'-joined slot string (driver-canon-safe; split('_') recovers it)
-    return ent.select(
-        "doc_id",
-        F.concat_ws(
-            "_", F.expr(_OPH_DENSE_EXPR).cast("array<string>")
-        ).alias("oph_sig"),
+    return sig.select(
+        "doc_id", F.concat_ws("_", F.col("sig").cast("array<string>")).alias("oph_sig")
     )
 
 
@@ -2612,15 +2572,12 @@ def oph_jaccard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference), b-bit (8x smaller storage), OPH ({SCALED_PERMS}x
     cheaper to compute). Plan: the audited demo LSH pair set plus one
     row-local fold over the two {OPH_BINS}-slot arrays per pair.
-    r13: rides the stored fingerprint pass (see bbit_jaccard_report —
-    five corpus re-derivations collapse to one materialized scan)."""
+    Rides the stored fingerprint pass, like bbit_jaccard_report."""
     hsf = _doc_shingle_hashes(spark, sf_dir)
     pairs = fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS)
-    sig = _oph_entries_from_bs(_bs_from_hs(hsf)).select(
-        "doc_id", F.expr(_OPH_DENSE_EXPR).alias("oph_sig")
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("oph_sig").alias("sa"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("oph_sig").alias("sb"))
+    sig = _oph_sig_from_bs(_bs_from_hs(hsf))
+    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
+    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
     agree = F.aggregate(
         F.zip_with("sa", "sb", lambda x, y: (x == y).cast("bigint")),
         F.lit(0).cast("bigint"),
@@ -2650,35 +2607,26 @@ def oph_jaccard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 OPH_ROWS_PER_BAND = OPH_BINS // SCALED_BANDS  # 4 slots per band
 
 
-def oph_sig_frame(sh: DataFrame) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — the densified OPH signature as the
-    slot-ordered array the band builder slices (oph_signatures' data
-    path before its driver-safe string encoding)."""
-    return _oph_entries(sh).select(
-        "doc_id", F.expr(_OPH_DENSE_EXPR).alias("sig")
-    )
-
-
 def _oph_sig_from_bs(bsf: DataFrame) -> DataFrame:
-    """oph_sig_frame from an already-hashed (doc_id, bs) frame — the
-    entry the stored-fingerprint pass feeds."""
+    """(doc_id, sig: array<bigint>) — the densified OPH signature of a
+    (doc_id, bs) frame as the slot-ordered array the band builder slices
+    (oph_signatures' data path before its driver-safe string
+    encoding)."""
     return _oph_entries_from_bs(bsf).select(
         "doc_id", F.expr(_OPH_DENSE_EXPR).alias("sig")
     )
 
 
-def oph_lsh_pairs(
-    sh: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """OPH-signature LSH near-dup pairs at the production geometry:
-    {OPH_BINS} densified slots -> {SCALED_BANDS} bands of
-    {OPH_ROWS_PER_BAND} -> hashed band keys (slots are 34-bit, so the
-    4-row band always rides _band_key_fn's md5 path) -> capped bucket
-    join -> exact verify."""
+def fingerprint_oph_pairs(hsf: DataFrame) -> DataFrame:
+    """OPH-signature LSH near-dup pairs of a fingerprint frame at the
+    production geometry: {OPH_BINS} densified slots -> {SCALED_BANDS}
+    bands of {OPH_ROWS_PER_BAND} -> hashed band keys (slots are 34-bit,
+    so the 4-row band always rides _band_key_fn's md5 path) -> capped
+    bucket join -> exact verify >= JACCARD_THRESHOLD."""
     bands = bands_from_sig(
-        oph_sig_frame(sh), SCALED_BANDS, OPH_ROWS_PER_BAND
+        _oph_sig_from_bs(_bs_from_hs(hsf)), SCALED_BANDS, OPH_ROWS_PER_BAND
     )
-    return lsh_verified_pairs(sh, bands, threshold)
+    return lsh_verified_pairs(hsf, bands)
 
 
 _SQL_OPH_LSH_CTES = (
@@ -2729,11 +2677,7 @@ def dedup_minhash_lsh_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 0.02 in tests/test_oph.py via dedup_recall_report_oph.
     Runs over the stored fingerprint pass — one corpus scan, int64
     verify (see dedup_minhash_lsh)."""
-    hsf = _doc_shingle_hashes(spark, sf_dir)
-    bands = bands_from_sig(
-        _oph_sig_from_bs(_bs_from_hs(hsf)), SCALED_BANDS, OPH_ROWS_PER_BAND
-    )
-    return lsh_verified_pairs(hsf, bands, JACCARD_THRESHOLD, set_col="hs")
+    return fingerprint_oph_pairs(_doc_shingle_hashes(spark, sf_dir))
 
 
 _SQL_OPH_RECALL = (
@@ -2772,20 +2716,8 @@ def dedup_recall_report_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacing the k-perm signature bill with OPH's — tests/test_oph.py
     asserts it within 0.02 of the k-perm tier's on the same corpus.
     Diagnostic path: run on a sample at 100 TB."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    truth = exact_jaccard_truth(sh)
-    found = oph_lsh_pairs(sh).select("doc_a", "doc_b")
-    ct = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    cf = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found"))
-    return ct.crossJoin(cf).select(
-        "n_true",
-        "n_found",
-        F.when(F.col("n_true") == 0, F.lit(1.0))
-        .otherwise(
-            F.round(F.col("n_found").cast("double") / F.col("n_true"), 6)
-        )
-        .alias("recall"),
-    )
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    return _recall_row(hsf, fingerprint_oph_pairs(hsf))
 
 
 # ---------------------------------------------------------------------------
@@ -2801,6 +2733,40 @@ def dedup_recall_report_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that tracks prefix-token document frequency — the right tier when a
 # contract says "every duplicate, guaranteed" and the corpus fits the
 # heavier join.
+#
+# The all-pairs pair is the family's string-shingle exception: the global
+# order breaks document-frequency ties on the shingle STRING (Spark's
+# array_sort over (tf, tok) structs, the oracle's
+# list_sort(struct_pack(tf, tok))), so which shingles land in a prefix —
+# and with it prefix_cand_pairs — depends on the strings themselves. Over
+# fingerprints the tie-break, and so the graded stats, would differ.
+def _prefix_index(
+    sh: DataFrame, threshold: float = JACCARD_THRESHOLD
+) -> tuple[DataFrame, DataFrame]:
+    """(freq, pre) of a (doc_id, sgl) string-shingle frame: the full
+    inverted index's per-shingle document frequency (tok, tf) and the
+    rarest-first prefix postings (doc_id, tok) — each doc's first
+    size - ceil(t*size) + 1 shingles under the global (tf, tok) order."""
+    ex = sh.select("doc_id", F.explode("sgl").alias("tok"))
+    freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
+    pre = (
+        ex.join(freq, "tok")
+        .groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    f"transform(slice(ord, 1, size(ord) "
+                    f"- cast(ceil({threshold} * size(ord)) as int) + 1), "
+                    "s -> s.tok)"
+                )
+            ).alias("tok"),
+        )
+    )
+    return freq, pre
+
+
 def allpairs_prefix_pairs(
     sh: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
@@ -2811,38 +2777,9 @@ def allpairs_prefix_pairs(
     shingle) order; any qualifying pair must collide inside both
     prefixes (the SSJoin lemma with a = max of the two per-doc overlap
     bounds), so completeness is unconditional."""
-    ex = sh.select("doc_id", F.explode("sgl").alias("tok"))
-    freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-    ordered = (
-        ex.join(freq, "tok")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
-    )
-    pre = ordered.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(slice(ord, 1, size(ord) "
-                f"- cast(ceil({threshold} * size(ord)) as int) + 1), "
-                "s -> s.tok)"
-            )
-        ).alias("tok"),
-    )
+    _, pre = _prefix_index(sh, threshold)
     cand = bucketed_pairs(pre, ["tok"], "doc_id", "doc_a", "doc_b").distinct()
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _pair_jaccard(cand, sh).filter(F.col("jaccard") >= threshold)
 
 
 _SQL_ALLPAIRS_PREFIX = (
@@ -2891,8 +2828,7 @@ def dedup_allpairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     never materialize a quadratic group. tests/test_allpairs.py pins
     set-equality with the exhaustive truth AND that the prefix index is
     strictly smaller than the full inverted index it replaces."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    return allpairs_prefix_pairs(sh)
+    return allpairs_prefix_pairs(_doc_shingles(spark, sf_dir))
 
 
 _SQL_ALLPAIRS_STATS = (
@@ -2942,24 +2878,7 @@ def allpairs_prefix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix's rarest-first ordering is why the ratio lands far below the
     naive ~(1-t)^2 length-share bound. One exchange per rollup, both
     1-row sides."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    ex = sh.select("doc_id", F.explode("sgl").alias("tok"))
-    freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-    pre = (
-        ex.join(freq, "tok")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(slice(ord, 1, size(ord) "
-                    f"- cast(ceil({JACCARD_THRESHOLD} * size(ord)) as int)"
-                    " + 1), s -> s.tok)"
-                )
-            ).alias("tok"),
-        )
-    )
+    freq, pre = _prefix_index(_doc_shingles(spark, sf_dir))
     pfreq = pre.groupBy("tok").agg(F.count(F.lit(1)).alias("pf"))
     fullstats = freq.agg(
         F.sum("tf").cast("bigint").alias("full_postings"),

@@ -529,7 +529,7 @@ def ann_lsh_topk(
     bucket derivation -> (table, bucket) candidate equi-join -> exact
     cosine on candidates -> per-query top-k. Identical plan shape at any
     geometry — the demo and PRODUCTION registrations differ only in the
-    constants they pass (the minhash_lsh_pairs discipline).
+    constants they pass (the dedup.fingerprint_lsh_pairs discipline).
 
     Candidates come from the CAPPED in-group enumeration
     (pairing.bucketed_query_pairs): healthy buckets expand their

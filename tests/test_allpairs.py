@@ -12,8 +12,9 @@ import pytest
 import pyspark.sql.functions as F
 
 from mapreduce_spark.operators.dedup import (
-    JACCARD_THRESHOLD,
+    _doc_shingle_hashes,
     _doc_shingles,
+    _prefix_index,
     allpairs_prefix_pairs,
     exact_jaccard_truth,
 )
@@ -25,9 +26,8 @@ def _pairs(df):
 
 @pytest.mark.seal
 def test_allpairs_prefix_equals_exhaustive_truth(spark, sf_dir):
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    got = _pairs(allpairs_prefix_pairs(sh))
-    truth = _pairs(exact_jaccard_truth(sh))
+    got = _pairs(allpairs_prefix_pairs(_doc_shingles(spark, sf_dir)))
+    truth = _pairs(exact_jaccard_truth(_doc_shingle_hashes(spark, sf_dir)))
     assert got == truth, (
         f"missing={sorted(truth - got)[:5]} extra={sorted(got - truth)[:5]}"
     )
@@ -37,25 +37,9 @@ def test_prefix_index_strictly_smaller_than_full(spark, sf_dir):
     """The candidate-volume win: prefix postings must be a strict subset
     of the full inverted index (at t = 0.5 each doc indexes about half
     its shingles)."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
+    sh = _doc_shingles(spark, sf_dir)
     full = sh.select("doc_id", F.explode("sgl").alias("tok")).count()
-    ex = sh.select("doc_id", F.explode("sgl").alias("tok"))
-    freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-    pre = (
-        ex.join(freq, "tok")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
-        .select(
-            F.explode(
-                F.expr(
-                    f"transform(slice(ord, 1, size(ord) "
-                    f"- cast(ceil({JACCARD_THRESHOLD} * size(ord)) as int)"
-                    " + 1), s -> s.tok)"
-                )
-            )
-        )
-        .count()
-    )
+    pre = _prefix_index(sh)[1].count()
     assert pre < full
     # at t = 0.5 the prefix is just over half of each doc
     assert pre <= 0.6 * full

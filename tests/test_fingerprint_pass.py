@@ -1,15 +1,19 @@
-"""Stored shingle-fingerprint pass (r13, guide §8): equivalence gates.
+"""Stored shingle-fingerprint pass (guide §8): equivalence gates.
 
-The LSH trio now derives signatures AND both exact-verify sides from one
-materialized (doc_id, hs) int64 fingerprint table (_doc_shingle_hashes)
-instead of re-deriving string shingles per plan reference. These tests
-pin the two claims that make that value-preserving:
+Every MinHash, OPH and n-gram consumer of the dedup family derives its
+signatures, inverted indexes and exact-verify sides from the (doc_id, hs)
+int64 fingerprint table (shingle_hashes / _doc_shingle_hashes) instead of
+from string shingles. These tests pin the two claims that make that
+value-preserving:
 
 1. bs = hs % P elementwise equals base_hashes(sgl) — so signatures and
-   band keys are bit-identical to the string-path derivation;
-2. hash-set Jaccard equals string-set Jaccard (md5_long injectivity
-   over the corpus's distinct shingles — checked directly), so the
-   verified pair sets and their jaccard values are frame-identical.
+   band keys are bit-identical to the oracles' string derivation;
+2. hash-set Jaccard, document frequency and first occurrence equal their
+   string-set values (md5_long injectivity over the distinct shingles of
+   every text the family hashes — checked directly).
+
+The row-for-row comparison of every consumer against its DuckDB oracle
+is tests/test_dedup_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -17,25 +21,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from mapreduce_spark.functions.hashing import md5_long
+from mapreduce_spark.functions.text import shingles, tokens
 from mapreduce_spark.operators.dedup import (
-    N_BANDS,
-    N_PERMS,
-    OPH_ROWS_PER_BAND,
-    SCALED_BANDS,
-    SCALED_PERMS,
     _bs_from_hs,
     _doc_shingle_hashes,
     _doc_shingles,
-    _oph_sig_from_bs,
-    bands_from_sig,
     base_hashes,
-    fingerprint_lsh_pairs,
-    lsh_verified_pairs,
-    minhash_lsh_pairs,
-    minhash_sig_array_np,
-    oph_lsh_pairs,
-    sig_array_np_from_bs,
 )
+from mapreduce_spark.operators.textops import scrub_expr
+from mapreduce_spark.sources.tables import load_table
 
 
 def _rows(df, cols):
@@ -43,55 +37,28 @@ def _rows(df, cols):
 
 
 def test_fingerprint_base_hashes_bit_identical(spark, sf_dir):
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
+    sh = _doc_shingles(spark, sf_dir)
     ref = sh.select("doc_id", base_hashes(F.col("sgl")).alias("bs"))
     got = _bs_from_hs(_doc_shingle_hashes(spark, sf_dir))
     assert _rows(got, ["doc_id", "bs"]) == _rows(ref, ["doc_id", "bs"])
 
 
 def test_md5_long_injective_over_corpus_shingles(spark, sf_dir):
-    ex = (
-        _doc_shingles(spark, sf_dir)
-        .select(F.explode("sgl").alias("s"))
-        .distinct()
+    """Over the raw documents' shingles AND the scrubbed-text shingles
+    curation_pipeline_neardup hashes (scrubbing every document covers
+    the gated subset it keeps)."""
+    raw = _doc_shingles(spark, sf_dir).select(F.explode("sgl").alias("s"))
+    scrubbed = load_table(spark, sf_dir, "documents").select(
+        F.explode(
+            F.array_distinct(shingles(tokens(scrub_expr(F.col("text"))), 3))
+        ).alias("s")
     )
+    ex = raw.unionByName(scrubbed).distinct()
     r = ex.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct(md5_long(F.col("s"))).alias("nh"),
     ).first()
     assert r["n"] == r["nh"], "md5_long collision inside the corpus"
-
-
-def test_fingerprint_trio_frames_match_string_path(spark, sf_dir):
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    hsf = _doc_shingle_hashes(spark, sf_dir)
-    cols = ["doc_a", "doc_b", "jaccard"]
-
-    # demo profile
-    assert _rows(fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS), cols) == _rows(
-        minhash_lsh_pairs(sh, N_PERMS, N_BANDS), cols
-    )
-    # production k-perm profile (Arrow signature kernel)
-    assert _rows(
-        fingerprint_lsh_pairs(
-            hsf, SCALED_PERMS, SCALED_BANDS, sig_fn=sig_array_np_from_bs
-        ),
-        cols,
-    ) == _rows(
-        minhash_lsh_pairs(
-            sh, SCALED_PERMS, SCALED_BANDS, sig_fn=minhash_sig_array_np
-        ),
-        cols,
-    )
-    # OPH profile
-    oph_fp = lsh_verified_pairs(
-        hsf,
-        bands_from_sig(
-            _oph_sig_from_bs(_bs_from_hs(hsf)), SCALED_BANDS, OPH_ROWS_PER_BAND
-        ),
-        set_col="hs",
-    )
-    assert _rows(oph_fp, cols) == _rows(oph_lsh_pairs(sh), cols)
 
 
 def test_release_local_checkpoints_empties_executor_storage(spark, sf_dir):

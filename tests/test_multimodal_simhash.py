@@ -125,13 +125,11 @@ def test_crossmodal_verdict_off_diagonal_cells(spark):
     'both'. Text and payload channels are fed INDEPENDENT planted
     frames, since on the graded tables payloads derive from text and
     the off-diagonal cells can never occur."""
-    import pyspark.sql.functions as F
-
-    from mapreduce_spark.functions.text import shingles, tokens
     from mapreduce_spark.operators.dedup import (
         N_BANDS,
         N_PERMS,
-        minhash_lsh_pairs,
+        fingerprint_lsh_pairs,
+        shingle_hashes,
     )
     from mapreduce_spark.operators.multimodal import (
         crossmodal_verdict_frame,
@@ -174,13 +172,10 @@ def test_crossmodal_verdict_off_diagonal_cells(spark):
         ],
         "doc_id long, payload binary",
     )
-    sh = texts.select(
-        "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
-    ).filter(F.size("sgl") > 0)
     verdicts = {
         r.doc_id: r.verdict
         for r in crossmodal_verdict_frame(
-            minhash_lsh_pairs(sh, N_PERMS, N_BANDS),
+            fingerprint_lsh_pairs(shingle_hashes(texts), N_PERMS, N_BANDS),
             payload_simhash_pairs(media),
         ).collect()
     }

@@ -489,14 +489,18 @@ def test_arrow_integer_kernels_stay_inside_scan_partitions(spark, sf_dir):
     mapInPandas, nothing shuffles before or inside the kernel."""
     from mapreduce_spark.operators.dedup import (
         SCALED_PERMS,
-        _doc_shingles,
-        minhash_sig_array_np,
+        _bs_from_hs,
+        shingle_hashes,
+        signatures_from_bs,
     )
     from mapreduce_spark.operators.similarity import lsh_buckets_np
     from mapreduce_spark.sources.tables import load_table
 
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    sig = minhash_sig_array_np(sh, SCALED_PERMS)
+    # the production profile's signature entry point must pick the Arrow
+    # kernel; the lazy (un-fanned, un-materialized) fingerprint frame
+    # keeps the scan in the same plan
+    bsf = _bs_from_hs(shingle_hashes(load_table(spark, sf_dir, "documents")))
+    sig = signatures_from_bs(bsf, SCALED_PERMS)
     assert audit.exchange_count(sig) == 0, audit.simple_plan(sig)
     assert "InPandas" in audit.simple_plan(sig)
 
@@ -506,3 +510,35 @@ def test_arrow_integer_kernels_stay_inside_scan_partitions(spark, sf_dir):
     bk = lsh_buckets_np(emb, 8, 2)
     assert audit.exchange_count(bk) == 0, audit.simple_plan(bk)
     assert "InPandas" in audit.simple_plan(bk)
+
+
+def test_fan_out_spreads_only_under_parallelism_scans(spark, sf_dir, monkeypatch):
+    """sources.tables.fan_out, which the fingerprint pass and the other
+    CPU-heavy per-row stages rely on to use every core: a scan with
+    fewer splits than defaultParallelism (the single-file sf0.001
+    documents table) plans one RoundRobinPartitioning exchange, and an
+    input that already has at least that many partitions plans none
+    more."""
+    from mapreduce_spark.sources.tables import fan_out, load_table
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_FANOUT", raising=False)
+    want = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents")
+    assert docs.rdd.getNumPartitions() < want
+
+    def round_robins(df):
+        # the physical plan before AQE: fan_out's own partition probe
+        # runs the input, after which executedPlan also lists the final
+        # stages
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        return plan, plan.count("RoundRobinPartitioning")
+
+    spread = fan_out(docs)
+    plan, n = round_robins(spread)
+    assert n == 1 and f"RoundRobinPartitioning({want})" in plan, plan
+    # already spread (by fan_out itself, or wider by the caller): no
+    # second exchange on top
+    plan, n = round_robins(fan_out(spread))
+    assert n == 1, plan
+    plan, n = round_robins(fan_out(docs.repartition(2 * want)))
+    assert n == 1 and f"RoundRobinPartitioning({2 * want})" in plan, plan

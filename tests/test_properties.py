@@ -327,10 +327,12 @@ def py_minhash_sig(sgl: list[str], n_perms: int) -> list[int]:
 def test_numpy_signature_fanout_matches_python_model(
     spark, monkeypatch, docs
 ):
-    """minhash_sig_array_np == the pure-python md5 model on generated
+    """sig_array_np_from_bs == the pure-python md5 model on generated
     shingle sets — with MH_NP_SLAB pinned to 2 so the slab-split min
     fold (the bounded-memory path a million-shingle document takes) is
     exercised on every example."""
+    import pyspark.sql.functions as F
+
     from mapreduce_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "MH_NP_SLAB", 2)
@@ -338,8 +340,9 @@ def test_numpy_signature_fanout_matches_python_model(
         [(i, sgl) for i, sgl in enumerate(docs)],
         "doc_id: long, sgl: array<string>",
     )
+    bsf = df.select("doc_id", dedup.base_hashes(F.col("sgl")).alias("bs"))
     got = {
         r["doc_id"]: list(r["sig"])
-        for r in dedup.minhash_sig_array_np(df, 7).collect()
+        for r in dedup.sig_array_np_from_bs(bsf, 7).collect()
     }
     assert got == {i: py_minhash_sig(sgl, 7) for i, sgl in enumerate(docs)}
