@@ -2149,10 +2149,9 @@ def rollup_state_write(li: DataFrame, name: str, mode: str = "overwrite") -> Non
     applied to aggregate state)."""
     spark = li.sparkSession
     if mode == "overwrite":
-        from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+        from mapreduce_spark.sources.fs import drop_table
 
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        fs_delete(spark, f"{warehouse_uri(spark)}/{name}")
+        drop_table(spark, name)
     (
         rollup_state(li)
         .write.mode(mode)

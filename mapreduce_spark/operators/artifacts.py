@@ -68,13 +68,8 @@ def run_concurrently(*thunks) -> list:
     default pinned-thread mode a plain pool thread does NOT inherit the
     caller's JVM-thread-local properties, so job descriptions, job
     groups and scheduler pools set by the caller would not cover the
-    pooled jobs (and cancelJobGroup could not reach them).
-
-    ``SPARK_GRAFT_SERIAL_BUILD=1`` runs the thunks serially instead —
-    the A/B measurement knob (and the conservative posture for
-    memory-tight clusters, where two concurrent jobs' peak state may
-    not co-reside)."""
-    if _env_on("SPARK_GRAFT_SERIAL_BUILD") or len(thunks) == 1:
+    pooled jobs (and cancelJobGroup could not reach them)."""
+    if len(thunks) == 1:
         return [t() for t in thunks]
     from pyspark import InheritableThread
 

@@ -990,14 +990,10 @@ def _write_index_tables(
     mode: str,
 ) -> None:
     if mode == "overwrite":
-        # A managed table's location can survive a dead session while the
-        # in-memory catalog entry does not; clear both so overwrite means
-        # overwrite regardless of what a previous session left behind.
-        from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+        from mapreduce_spark.sources.fs import drop_table
 
         for suffix in ("bands", "hashes"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-            fs_delete(spark, f"{warehouse_uri(spark)}/{name}_{suffix}")
+            drop_table(spark, f"{name}_{suffix}")
     # the two table writes share no dependency: overlap them so the
     # hashes job back-fills the bands job's straggler tail (guide §2.6;
     # A/B-measured in the r12 optimization round, OPTIMIZATION_r12.md)
@@ -1105,6 +1101,7 @@ def minhash_index_attach(
     bucket layout is carried by the files themselves (bucket-id file
     suffixes), so an external CLUSTERED BY table over the old location
     restores shuffle-free probes without rewriting a byte."""
+    # DROP only: drop_table would delete files this may be attaching
     spark.sql(f"DROP TABLE IF EXISTS {name}_bands")
     spark.sql(f"DROP TABLE IF EXISTS {name}_hashes")
     spark.sql(

@@ -372,10 +372,9 @@ def _bucketed_write(df: DataFrame, name: str, key: str, buckets: int) -> None:
     index-compaction discipline), so scans report both the hash
     distribution AND the sort order to the planner."""
     spark = df.sparkSession
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    fs_delete(spark, f"{warehouse_uri(spark)}/{name}")
+    drop_table(spark, name)
     (
         df.repartition(buckets, key)
         .write.format("parquet")

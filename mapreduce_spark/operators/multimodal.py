@@ -833,10 +833,9 @@ def cdc_index_write(
     dedup_index_persisted's shape for the byte-dedup tier."""
     spark = chunks.sparkSession
     if mode == "overwrite":
-        from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+        from mapreduce_spark.sources.fs import drop_table
 
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        fs_delete(spark, f"{warehouse_uri(spark)}/{name}")
+        drop_table(spark, name)
     (
         chunks.select("chash", "clen")
         .distinct()

@@ -2993,13 +2993,9 @@ def graph_index_write(emb: DataFrame, name: str = GRAPH_INDEX_TABLE) -> None:
     file split, so a frontier probe touches |frontier| bucket groups —
     at a production 1e9 x k edge table the serve-side read is the
     frontier's buckets, never the table."""
-    spark = emb.sparkSession
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    # a stale location with no catalog entry (crashed run, fresh
-    # session over an old warehouse) must not block the rebuild
-    fs_delete(spark, f"{warehouse_uri(spark)}/{name}")
+    drop_table(emb.sparkSession, name)
     graph = knn_graph_edges(emb, LSH_PLANES, LSH_TABLES, KNN_GRAPH_K)
     (
         graph.write.mode("overwrite")
@@ -3061,16 +3057,11 @@ def routed_artifacts_write(emb: DataFrame, name: str) -> None:
     reuses when the beam graph itself is shared (tools/bench_probe.py
     prices the routing artifacts' build apart from the edge build this
     way)."""
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
-    spark = emb.sparkSession
     cent, members = routed_artifacts(emb)
     for suffix, df in (("cent", cent), ("members", members)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        # a stale location with no catalog entry (dead session over an
-        # old warehouse) must not block the rebuild — graph_index_write's
-        # rule applied to the routing artifacts
-        fs_delete(spark, f"{warehouse_uri(spark)}/{name}_{suffix}")
+        drop_table(emb.sparkSession, f"{name}_{suffix}")
         df.write.mode("overwrite").saveAsTable(f"{name}_{suffix}")
 
 
@@ -3411,19 +3402,30 @@ _PQ_D2 = "cast(" + " + ".join(
 ) + " as bigint)"
 
 
-def _pq_sub_arrays(ex: DataFrame) -> DataFrame:
-    """(vec_id, sub_idx, xqa: array<bigint>) — each sub-vector assembled
+def _pq_sub_arrays(ex: DataFrame, keys: tuple[str, ...] = ("vec_id",)) -> DataFrame:
+    """(*keys, sub_idx, xqa: array<bigint>) — each sub-vector assembled
     into one pos-ordered integer array. Distances then evaluate as one
     8-element fold per (vector, codebook-entry) ROW instead of 8 joined
     pos-rows feeding a 3.2M-group aggregation — measured 8.5x faster at
     sf0.1 with bit-identical d2 (integer sums are order-independent, so
     unlike the float cosine fold this reassociation is exact by
     construction)."""
-    return ex.groupBy("vec_id", "sub_idx").agg(
+    return ex.groupBy(*keys, "sub_idx").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "xq"))),
             lambda e: e["xq"],
         ).alias("xqa")
+    )
+
+
+def _book_d2(xa: DataFrame, book: DataFrame) -> DataFrame:
+    """(keys..., sub_idx, seed_id, d2): the exact sub-space L2^2 of every
+    ``xa`` sub-array to every entry of the broadcast (sub_idx, seed_id,
+    sqa) ``book``. Every column of ``xa`` other than xqa is carried
+    through as a key."""
+    keys = [c for c in xa.columns if c != "xqa"]
+    return xa.join(F.broadcast(book), "sub_idx").select(
+        *keys, "seed_id", F.expr(_PQ_D2).alias("d2")
     )
 
 
@@ -3441,9 +3443,7 @@ def _pq_pairs_frame(ex: DataFrame) -> DataFrame:
         "sub_idx",
         F.col("xqa").alias("sqa"),
     )
-    return xa.join(F.broadcast(seeds), "sub_idx").select(
-        "vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2")
-    )
+    return _book_d2(xa, seeds)
 
 
 def _pq_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4785,6 +4785,17 @@ def _pq_pairs_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_pairs_trained_frame(_pq_quantized(spark, sf_dir))
 
 
+def _book_arrays(book: DataFrame) -> DataFrame:
+    """(sub_idx, seed_id, sqa): a (sub_idx, seed_id, pos, cq) book
+    reassembled to pos-ordered arrays for the unrolled integer fold."""
+    return book.groupBy("sub_idx", "seed_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cq"))),
+            lambda e: e["cq"],
+        ).alias("sqa")
+    )
+
+
 def _pq_pairs_trained_frame(ex: DataFrame) -> DataFrame:
     """(vec_id, sub_idx, seed_id, d2) against the TRAINED codebook —
     the _pq_pairs shape with pqt_book broadcast in place of the raw
@@ -4796,15 +4807,8 @@ def _pq_pairs_trained_frame(ex: DataFrame) -> DataFrame:
     consumers ~1.5x at sf0.1 because the two book references execute
     concurrently and the barrier job costs more than the duplication it
     removes; OPTIMIZATION_r12.md)."""
-    book = _pq_refined_book_frame(ex).groupBy("sub_idx", "seed_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cq"))),
-            lambda e: e["cq"],
-        ).alias("sqa")
-    )
-    return _pq_sub_arrays(ex).join(F.broadcast(book), "sub_idx").select(
-        "vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2")
-    )
+    book = _book_arrays(_pq_refined_book_frame(ex))
+    return _book_d2(_pq_sub_arrays(ex), book)
 
 
 @register(
@@ -5485,15 +5489,32 @@ def _residual_ex(ex: DataFrame, cells: DataFrame, cex: DataFrame, id_col: str) -
     )
 
 
-def _book_arrays(book: DataFrame) -> DataFrame:
-    """(sub_idx, seed_id, sqa): a (sub_idx, seed_id, pos, cq) book
-    reassembled to pos-ordered arrays for the unrolled integer fold."""
-    return book.groupBy("sub_idx", "seed_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cq"))),
-            lambda e: e["cq"],
-        ).alias("sqa")
+def _store_ex(
+    emb: DataFrame, cent: DataFrame, assign: DataFrame | None
+) -> DataFrame:
+    """(vec_id, sub_idx, pos, xq): the micro-unit rows a PQ code is taken
+    of — ``emb``'s own components when ``assign`` is None (raw codec),
+    else each vector's residual to its assigned (vec_id, cid) cell of
+    ``cent`` (residual codec)."""
+    ex = _pq_ex_frame(emb)
+    if assign is None:
+        return ex
+    return _residual_ex(ex, assign, _cent_micro(cent), "vec_id").select(
+        "vec_id", "sub_idx", "pos", "xq"
     )
+
+
+def _residual_qtab(
+    q_ex: DataFrame, route: DataFrame, cex: DataFrame, book: DataFrame
+) -> DataFrame:
+    """(query_id, cid, sub_idx, code, d2): the residual ADC lookup table,
+    one per (query, probed cell) — each (query_id, sub_idx, pos, xq)
+    query row re-expressed as its residual to every cell ``route``
+    sends it to, scored against every ``book`` entry."""
+    q_arr = _pq_sub_arrays(
+        _residual_ex(q_ex, route, cex, "query_id"), ("query_id", "cid")
+    )
+    return _book_d2(q_arr, book).withColumnRenamed("seed_id", "code")
 
 
 def ivfpq_adc_residual_topk(
@@ -5563,30 +5584,14 @@ def ivfpq_adc_residual_topk(
     (assign, res_ex, book_arr), probe = run_concurrently(
         _corpus_side, _probe_side
     )
-    corpus_pairs = _pq_sub_arrays(res_ex).join(
-        F.broadcast(book_arr), "sub_idx"
-    ).select("vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2"))
-    codes = _pq_codes(corpus_pairs)
-    q_res = _residual_ex(
+    codes = _pq_codes(_book_d2(_pq_sub_arrays(res_ex), book_arr))
+    qtab = _residual_qtab(
         ex.filter(F.col("vec_id") < n_queries).withColumnRenamed(
             "vec_id", "query_id"
         ),
         probe,
         cex,
-        "query_id",
-    )
-    q_arr = q_res.groupBy("query_id", "cid", "sub_idx").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "xq"))),
-            lambda e: e["xq"],
-        ).alias("xqa")
-    )
-    qtab = q_arr.join(F.broadcast(book_arr), "sub_idx").select(
-        "query_id",
-        "cid",
-        "sub_idx",
-        F.col("seed_id").alias("code"),
-        F.expr(_PQ_D2).alias("d2"),
+        book_arr,
     )
     cand = (
         probe.join(assign, "cid")
@@ -5758,15 +5763,9 @@ def embedding_pq_codes_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = _hier_assign(embn, cent, sup)
     # the residual training set is read 4x downstream (book seeds,
     # assignment, refinement, corpus coding) — materialized once
-    res_ex = materialize(
-        _residual_ex(
-            _pq_ex_frame(emb), assign, _cent_micro(cent), "vec_id"
-        ).select("vec_id", "sub_idx", "pos", "xq")
-    )
+    res_ex = materialize(_store_ex(emb, cent, assign))
     book_arr = _book_arrays(_pq_refined_book_frame(res_ex))
-    pairs = _pq_sub_arrays(res_ex).join(
-        F.broadcast(book_arr), "sub_idx"
-    ).select("vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2"))
+    pairs = _book_d2(_pq_sub_arrays(res_ex), book_arr)
     best = pairs.groupBy("vec_id", "sub_idx").agg(
         F.min(F.col("d2") * PQ_PACK + F.col("seed_id")).alias("packed")
     )
@@ -5869,6 +5868,8 @@ def vector_index_write(
     cent_mod: int | None = None,
     rem: int = IVF_CENT_REM,
     train: DataFrame | None = None,
+    *,
+    residual: bool = False,
 ) -> None:
     """Build and persist the IVFADC index ``name``: codes for ``emb`` as
     cid-partitioned parquet (one directory per coarse cell — at a
@@ -5883,41 +5884,46 @@ def vector_index_write(
     production the quantizer trains on a sample while data arrives
     incrementally, so the two are distinct by design (and
     similarity_index_appended grades exactly that split). One data
-    pass; raw embeddings are never stored."""
-    spark = emb.sparkSession
-    from mapreduce_spark.sources.fs import fs_delete
+    pass; raw embeddings are never stored.
 
+    ``residual=True`` stores the FAISS by_residual codec in the same
+    layout and byte budget, and differs in exactly two places: the book
+    trains on, and the codes quantize, each vector's residual
+    (x - c_cell) to its assigned cell instead of x; and the probe's
+    lookup table is keyed by (query, probed cell) instead of by query.
+    vector_index_append and vector_index_probe take the same keyword
+    and must be given the value the index was written with."""
+    from mapreduce_spark.sources.fs import drop_table, fs_delete
+
+    spark = emb.sparkSession
     train = emb if train is None else train
     for suffix in ("centroids", "book"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        fs_delete(
-            spark,
-            f"{_vindex_codes_path(spark, name).removesuffix('_codes')}_{suffix}",
-        )
+        drop_table(spark, f"{name}_{suffix}")
     if cent_mod is None:
         # production default: sample-trained sqrt-law quantizer WITH its
         # super routing layer — the stored (cid, ce, cn, sid) table lets
         # append/probe route two-level without re-deriving any modulus.
-        # Stays lazy (r12 optimization round, measured): eager lost the
-        # similarity_index_persisted A/B (12.68/8.31 s vs 7.00/7.06 s)
-        # — the quantizer is consumed by ONE write action whose two
-        # subtree references run concurrently (OPTIMIZATION_r12.md)
-        cent, _ = ivf_trained_hier(train)
+        # Eagerness measured both ways (r12 optimization round,
+        # OPTIMIZATION_r12.md): the raw quantizer is consumed by ONE
+        # write action whose two subtree references run concurrently,
+        # and eager lost the similarity_index_persisted A/B (12.68/8.31 s
+        # vs 7.00/7.06 s); the residual book also reads the quantizer
+        # (assignment and cell residuals), so lazy re-ran it in both
+        # write actions and eager trains it once.
+        cent, _ = ivf_trained_hier(train, eager=residual)
     else:
         cent = refined_centroids(train, cent_mod, rem)
-    book = _pq_refined_book_frame(_pq_ex_frame(train)).groupBy(
-        "sub_idx", "seed_id"
-    ).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cq"))),
-            lambda e: e["cq"],
-        ).alias("sqa")
+    assign = (
+        _stored_cent_assign(train.withColumn("nrm", norm(F.col("embedding"))), cent)
+        if residual
+        else None
     )
-    # the quantizer write and the book write share no dependency (the
-    # book trains on raw sub-vectors, not on cells): overlap the two
-    # jobs so one back-fills the other's tail (guide §2.6; A/B-measured
-    # in the r12 optimization round, OPTIMIZATION_r12.md). The codes
-    # append below reads BOTH stored tables, so it stays after the join.
+    book = _book_arrays(_pq_refined_book_frame(_store_ex(train, cent, assign)))
+    # the quantizer write and the book write are independent jobs:
+    # overlap them so one back-fills the other's tail (guide §2.6;
+    # A/B-measured in the r12 optimization round, OPTIMIZATION_r12.md).
+    # The codes append below reads BOTH stored tables, so it stays after
+    # the join.
     run_concurrently(
         lambda: cent.write.mode("overwrite")
         .format("parquet")
@@ -5927,10 +5933,12 @@ def vector_index_write(
         .saveAsTable(f"{name}_book"),
     )
     fs_delete(spark, _vindex_codes_path(spark, name))
-    vector_index_append(emb, name)
+    vector_index_append(emb, name, residual=residual)
 
 
-def vector_index_append(new_emb: DataFrame, name: str) -> None:
+def vector_index_append(
+    new_emb: DataFrame, name: str, *, residual: bool = False
+) -> None:
     """Fold a batch of new vectors into the on-disk index ``name``:
     assignment and codes derive from the STORED quantizer and book (read
     back — stored and derived state can never drift, and the expensive
@@ -5944,10 +5952,8 @@ def vector_index_append(new_emb: DataFrame, name: str) -> None:
     stored_book = spark.table(f"{name}_book")
     embn = new_emb.withColumn("nrm", norm(F.col("embedding")))
     assign = _stored_cent_assign(embn, stored_cent)
-    pairs = _pq_sub_arrays(_pq_ex_frame(new_emb)).join(
-        F.broadcast(stored_book), "sub_idx"
-    ).select("vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2"))
-    codes = _pq_codes(pairs)
+    ex = _store_ex(new_emb, stored_cent, assign if residual else None)
+    codes = _pq_codes(_book_d2(_pq_sub_arrays(ex), stored_book))
     codes_arr = codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub_idx", "code"))),
@@ -5970,17 +5976,19 @@ def vector_index_probe(
     nprobe: int = SCALED_IVF_NPROBE,
     k: int = TOP_K,
     codes_path: str | None = None,
+    *,
+    residual: bool = False,
 ) -> DataFrame:
     """ADC top-k of a (vec_id, embedding) query batch against the
     on-disk index ``name``: route each query to its nprobe cells under
     the STORED quantizer, read ONLY those cells' code partitions (the
     route side broadcasts, so Catalyst prunes the codes scan with a
-    dynamic-partition-pruning subquery), build the per-query lookup
-    table against the STORED book, and fold integer ADC sums over the
-    candidates' codes. Nothing here touches raw corpus embeddings —
-    the probe's input bytes are nprobe/|cells| of the code table plus
-    two broadcast codebooks. ``codes_path`` points the code scan at a
-    location other than the warehouse default — the re-attach path
+    dynamic-partition-pruning subquery), build the lookup table against
+    the STORED book, and fold integer ADC sums over the candidates'
+    codes. Nothing here touches raw corpus embeddings — the probe's
+    input bytes are nprobe/|cells| of the code table plus two broadcast
+    codebooks. ``codes_path`` points the code scan at a location other
+    than the warehouse default — the re-attach path
     (vector_index_attach), where the codebook TABLES need catalog
     entries but the cid-partitioned codes are read by path alone."""
     cent = spark.table(f"{name}_centroids")
@@ -5990,24 +5998,26 @@ def vector_index_probe(
         F.col("vec_id").alias("query_id"), "embedding", "nrm"
     )
     route = _stored_cent_route(qn, cent, nprobe)
-    qtab = (
-        _pq_sub_arrays(_pq_ex_frame(queries))
-        .join(F.broadcast(book), "sub_idx")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "sub_idx",
-            F.col("seed_id").alias("code"),
-            F.expr(_PQ_D2).alias("d2"),
+    if residual:
+        qtab = _residual_qtab(
+            _pq_ex_frame(queries).withColumnRenamed("vec_id", "query_id"),
+            route,
+            _cent_micro(cent),
+            book,
         )
-    )
+        keys = ["query_id", "cid"]
+    else:
+        qtab = _book_d2(_pq_sub_arrays(_pq_ex_frame(queries)), book)
+        qtab = qtab.withColumnsRenamed({"vec_id": "query_id", "seed_id": "code"})
+        keys = ["query_id"]
     cand = codes.join(route, "cid").filter(
         F.col("vec_id") != F.col("query_id")
     )
     sub = cand.select(
-        "query_id", "vec_id", F.posexplode("pq_code").alias("sub_idx", "code")
+        *keys, "vec_id", F.posexplode("pq_code").alias("sub_idx", "code")
     )
     adc = (
-        sub.join(F.broadcast(qtab), ["query_id", "sub_idx", "code"])
+        sub.join(F.broadcast(qtab), [*keys, "sub_idx", "code"])
         .groupBy("query_id", "vec_id")
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
@@ -6104,6 +6114,7 @@ def vector_index_attach(
         ("centroids", centroids_location),
         ("book", book_location),
     ):
+        # DROP only: drop_table would delete files this may be attaching
         spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
         spark.sql(
             f"CREATE TABLE {name}_{suffix} USING parquet LOCATION '{loc}'"
@@ -6227,158 +6238,6 @@ def similarity_index_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# RESIDUAL persisted index (VERDICT r7 #4): the ship-state artifact of the
-# FAISS by_residual default. vector_index_write stores raw-subvector codes;
-# these store codes of (x - c_cell) plus the residual-trained book — the
-# index a production deployment actually serves, since residual encoding
-# buys +recall at the same byte budget (tests/test_ivfpq_residual.py).
-
-
-def vector_index_write_residual(
-    emb: DataFrame,
-    name: str,
-    cent_mod: int | None = None,
-    rem: int = IVF_CENT_REM,
-    train: DataFrame | None = None,
-) -> None:
-    """Build + persist the residual-encoded IVFADC index ``name``: the
-    trained coarse quantizer as ``{name}_centroids``, the RESIDUAL-
-    trained PQ book (Lloyd-refined on the training corpus's (x - c_cell)
-    micro components) as ``{name}_book``, and cid-partitioned residual
-    codes. Same storage layout and byte budget as vector_index_write —
-    what changes is what the codes quantize. ``train`` defaults to
-    ``emb`` (production: train on a sample, append the stream)."""
-    spark = emb.sparkSession
-    from mapreduce_spark.sources.fs import fs_delete
-
-    train = emb if train is None else train
-    for suffix in ("centroids", "book"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        fs_delete(
-            spark,
-            f"{_vindex_codes_path(spark, name).removesuffix('_codes')}_{suffix}",
-        )
-    if cent_mod is None:
-        # eager (r12 optimization round, measured): the lazy quantizer
-        # subtree re-ran in BOTH the centroid-write action and the
-        # book-write action (assign + _cent_micro reference cent);
-        # eager trains once and both actions read the checkpoint
-        cent, _ = ivf_trained_hier(train, eager=True)
-    else:
-        cent = refined_centroids(train, cent_mod, rem)
-    embn = train.withColumn("nrm", norm(F.col("embedding")))
-    assign = _stored_cent_assign(embn, cent)
-    res_ex = _residual_ex(
-        _pq_ex_frame(train), assign, _cent_micro(cent), "vec_id"
-    ).select("vec_id", "sub_idx", "pos", "xq")
-    book = _book_arrays(_pq_refined_book_frame(res_ex))
-    # both writes read the checkpointed quantizer (eager above), so
-    # they are independent jobs — overlap them (guide §2.6; the codes
-    # append reads both stored tables and stays after the join)
-    run_concurrently(
-        lambda: cent.write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{name}_centroids"),
-        lambda: book.write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{name}_book"),
-    )
-    fs_delete(spark, _vindex_codes_path(spark, name))
-    vector_index_append_residual(emb, name)
-
-
-def vector_index_append_residual(new_emb: DataFrame, name: str) -> None:
-    """Fold a batch into the residual index ``name`` under the STORED
-    quantizer and residual book (read back, never retrained — stored and
-    derived state cannot drift): coarse-assign, re-express each vector
-    as its cell residual, code against the stored book, append into the
-    touched cells' directories only. Per-batch cost tracks |batch|."""
-    spark = new_emb.sparkSession
-    stored_cent = spark.table(f"{name}_centroids")
-    stored_book = spark.table(f"{name}_book")
-    embn = new_emb.withColumn("nrm", norm(F.col("embedding")))
-    assign = _stored_cent_assign(embn, stored_cent)
-    res_ex = _residual_ex(
-        _pq_ex_frame(new_emb), assign, _cent_micro(stored_cent), "vec_id"
-    ).select("vec_id", "sub_idx", "pos", "xq")
-    pairs = _pq_sub_arrays(res_ex).join(
-        F.broadcast(stored_book), "sub_idx"
-    ).select("vec_id", "sub_idx", "seed_id", F.expr(_PQ_D2).alias("d2"))
-    codes = _pq_codes(pairs)
-    codes_arr = codes.groupBy("vec_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub_idx", "code"))),
-            lambda e: e["code"].cast("int"),
-        ).alias("pq_code")
-    )
-    (
-        assign.join(codes_arr, "vec_id")
-        .repartition("cid")
-        .write.partitionBy("cid")
-        .mode("append")
-        .parquet(_vindex_codes_path(spark, name))
-    )
-
-
-def vector_index_probe_residual(
-    spark: SparkSession,
-    name: str,
-    queries: DataFrame,
-    nprobe: int = SCALED_IVF_NPROBE,
-    k: int = TOP_K,
-) -> DataFrame:
-    """Residual ADC top-k against the on-disk index ``name``: route each
-    query under the STORED quantizer, read ONLY the routed cells' code
-    partitions (broadcast route side → dynamic partition pruning, same
-    plan pin as the raw probe), build the per-(query, cell) lookup table
-    from the QUERY'S residual to that cell against the STORED book, and
-    fold integer ADC sums over candidate codes. The corpus is never
-    re-quantized; probe input bytes are nprobe/|cells| of the code table
-    plus two broadcast codebooks."""
-    cent = spark.table(f"{name}_centroids")
-    book = spark.table(f"{name}_book")
-    codes = spark.read.parquet(_vindex_codes_path(spark, name))
-    qn = queries.withColumn("nrm", norm(F.col("embedding"))).select(
-        F.col("vec_id").alias("query_id"), "embedding", "nrm"
-    )
-    route = _stored_cent_route(qn, cent, nprobe)
-    q_res = _residual_ex(
-        _pq_ex_frame(queries).withColumnRenamed("vec_id", "query_id"),
-        route,
-        _cent_micro(cent),
-        "query_id",
-    )
-    q_arr = q_res.groupBy("query_id", "cid", "sub_idx").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "xq"))),
-            lambda e: e["xq"],
-        ).alias("xqa")
-    )
-    qtab = q_arr.join(F.broadcast(book), "sub_idx").select(
-        "query_id",
-        "cid",
-        "sub_idx",
-        F.col("seed_id").alias("code"),
-        F.expr(_PQ_D2).alias("d2"),
-    )
-    cand = codes.join(route, "cid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sub = cand.select(
-        "query_id",
-        "cid",
-        "vec_id",
-        F.posexplode("pq_code").alias("sub_idx", "code"),
-    )
-    adc = (
-        sub.join(F.broadcast(qtab), ["query_id", "cid", "sub_idx", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
-    )
-    return _rank_topk(adc, k, "adc_d2", desc=False)
-
-
 @register("similarity_index_persisted_residual", oracle=_IVFPQ_RSD_SQL)
 def similarity_index_persisted_residual(
     spark: SparkSession, sf_dir: str
@@ -6394,13 +6253,14 @@ def similarity_index_persisted_residual(
     and recall is at least the raw persisted tier's on the planted
     clustered corpus (tests/test_ivfpq_residual.py)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    vector_index_write_residual(emb, "vindex_rsd")
-    return vector_index_probe_residual(
+    vector_index_write(emb, "vindex_rsd", residual=True)
+    return vector_index_probe(
         spark,
         "vindex_rsd",
         emb.filter(F.col("vec_id") < N_QUERIES),
         SCALED_IVF_NPROBE,
         TOP_K,
+        residual=True,
     )
 
 

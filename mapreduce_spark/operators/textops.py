@@ -2774,14 +2774,13 @@ def bpe_vocab_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     and serving clusters share nothing but the artifact. Apply cost per
     rule is one broadcast 1-row join + a per-row greedy fold over the
     |vocab|-sized frame, checkpointed per round (O(1) plan depth)."""
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
     rules, _ = _bpe_run(spark, sf_dir, BPE_SCALED_ITERS)
     allr = rules[0]
     for r in rules[1:]:
         allr = allr.unionByName(r)
-    spark.sql(f"DROP TABLE IF EXISTS {BPE_RULES_TABLE}")
-    fs_delete(spark, f"{warehouse_uri(spark)}/{BPE_RULES_TABLE}")
+    drop_table(spark, BPE_RULES_TABLE)
     allr.write.mode("overwrite").format("parquet").saveAsTable(BPE_RULES_TABLE)
 
     stored = spark.table(BPE_RULES_TABLE)

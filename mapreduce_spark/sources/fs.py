@@ -55,6 +55,15 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
     return bool(fs.delete(p, True))
 
 
+def drop_table(spark: SparkSession, name: str) -> None:
+    """Drop table ``name`` and delete its warehouse location. Overwrite
+    means overwrite: a stale location with no catalog entry (a crashed
+    run, a fresh session over an old warehouse) must not block the
+    rebuild."""
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    fs_delete(spark, f"{warehouse_uri(spark)}/{name}")
+
+
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """True if ``path`` exists on its own filesystem (URI-scheme-aware)."""
     fs, p = _fs_and_path(spark, path)

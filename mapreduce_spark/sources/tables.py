@@ -30,7 +30,6 @@ from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from mapreduce_spark.operators.artifacts import _env_on
 from mapreduce_spark.session import tune_session
 from mapreduce_spark.sources.fs import PathStatus, fs_status
 
@@ -114,8 +113,6 @@ def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     the scan (the exchange sits ABOVE it). Apply only where per-row
     compute dominates the one extra row shuffle; scan->exchange shapes
     (plain aggregations, joins) must NOT pay a second exchange.
-    ``SPARK_GRAFT_NO_FANOUT=1`` makes every call a no-op (the A/B
-    measurement knob, guide §1).
 
     ``bytes_per_task`` makes the target SCALE-ADAPTIVE for stages whose
     per-byte work is moderate (shingle-explode aggregations, Arrow
@@ -128,8 +125,6 @@ def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     spread fully — measured a win at every scale point. Input bytes are
     the Hadoop file lengths of ``df.inputFiles()`` (``sources.fs.fs_status``),
     so the clamp works the same on every URI scheme."""
-    if _env_on("SPARK_GRAFT_NO_FANOUT"):
-        return df
     spark = df.sparkSession
     want = spark.sparkContext.defaultParallelism
     if bytes_per_task:

@@ -896,15 +896,14 @@ def stream_embdup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-anti join admits the clean rows. ZERO streaming state."""
     import tempfile
 
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     for suffix in ("buckets", "vectors"):
-        spark.sql(f"DROP TABLE IF EXISTS embdup_idx_{suffix}")
-        fs_delete(spark, f"{warehouse_uri(spark)}/embdup_idx_{suffix}")
+        drop_table(spark, f"embdup_idx_{suffix}")
     (
         _eg_lsh_buckets(
             corpus.select("vec_id", "embedding"), _EG_PLANES, _EG_TABLES
@@ -1040,15 +1039,14 @@ def stream_embdup_gate_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time
 
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     for suffix in ("buckets", "vectors"):
-        spark.sql(f"DROP TABLE IF EXISTS embacc_idx_{suffix}")
-        fs_delete(spark, f"{warehouse_uri(spark)}/embacc_idx_{suffix}")
+        drop_table(spark, f"embacc_idx_{suffix}")
 
     def _append_index(vecs: DataFrame, mode: str) -> None:
         (
@@ -1290,14 +1288,13 @@ def stream_scd2_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from mapreduce_spark.operators.windows import scd2_apply_delta
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     for suffix in ("closed", "open"):
-        spark.sql(f"DROP TABLE IF EXISTS scd2s_{suffix}")
-        fs_delete(spark, f"{warehouse_uri(spark)}/scd2s_{suffix}")
+        drop_table(spark, f"scd2s_{suffix}")
     spark.createDataFrame(
         [],
         "user_id long, version long, state string, "
@@ -1408,14 +1405,13 @@ def stream_scd2_view_with_deletes(
         SCD2_TOMBSTONE,
         scd2_apply_delta,
     )
-    from mapreduce_spark.sources.fs import fs_delete, warehouse_uri
+    from mapreduce_spark.sources.fs import drop_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     for suffix in ("closed", "open", "tomb"):
-        spark.sql(f"DROP TABLE IF EXISTS scd2d_{suffix}")
-        fs_delete(spark, f"{warehouse_uri(spark)}/scd2d_{suffix}")
+        drop_table(spark, f"scd2d_{suffix}")
     spark.createDataFrame(
         [],
         "user_id long, version long, state string, "

@@ -68,19 +68,17 @@ def test_persisted_residual_recall_at_least_persisted_raw(spark, clustered):
     index's (both probed under identical routing and byte budgets)."""
     from mapreduce_spark.operators.similarity import (
         vector_index_probe,
-        vector_index_probe_residual,
         vector_index_write,
-        vector_index_write_residual,
     )
 
     df, vecs = clustered
     vector_index_write(df, "t_vx_raw_planted")
-    vector_index_write_residual(df, "t_vx_rsd_planted")
+    vector_index_write(df, "t_vx_rsd_planted", residual=True)
     raw_rows = vector_index_probe(
         spark, "t_vx_raw_planted", df, SCALED_IVF_NPROBE, TOP_K
     ).collect()
-    rsd_rows = vector_index_probe_residual(
-        spark, "t_vx_rsd_planted", df, SCALED_IVF_NPROBE, TOP_K
+    rsd_rows = vector_index_probe(
+        spark, "t_vx_rsd_planted", df, SCALED_IVF_NPROBE, TOP_K, residual=True
     ).collect()
     truth = _exact_l2_truth(vecs)
     r_raw, r_rsd = _recall(raw_rows, truth), _recall(rsd_rows, truth)

@@ -512,7 +512,7 @@ def test_arrow_integer_kernels_stay_inside_scan_partitions(spark, sf_dir):
     assert "InPandas" in audit.simple_plan(bk)
 
 
-def test_fan_out_spreads_only_under_parallelism_scans(spark, sf_dir, monkeypatch):
+def test_fan_out_spreads_only_under_parallelism_scans(spark, sf_dir):
     """sources.tables.fan_out, which the fingerprint pass and the other
     CPU-heavy per-row stages rely on to use every core: a scan with
     fewer splits than defaultParallelism (the single-file sf0.001
@@ -521,7 +521,6 @@ def test_fan_out_spreads_only_under_parallelism_scans(spark, sf_dir, monkeypatch
     more."""
     from mapreduce_spark.sources.tables import fan_out, load_table
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_FANOUT", raising=False)
     want = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents")
     assert docs.rdd.getNumPartitions() < want

@@ -7,6 +7,7 @@ nprobe cells, and the round trip changes no ranked row.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from mapreduce_spark.operators.similarity import (
     SCALED_IVF_NPROBE,
@@ -100,23 +101,32 @@ def test_cell_balance_gauge_gated(spark, sf_dir):
     )
 
 
-def test_append_preserves_pruning_and_matches_bulk(spark, sf_dir):
-    """Append parity law: staging the data in two writes under a pinned
-    training corpus yields byte-identical probe results to the one-shot
-    bulk build, and the probe plan still carries the DPP subquery."""
+CODECS = pytest.mark.parametrize("residual", [False, True], ids=["raw", "residual"])
+
+
+@CODECS
+def test_append_preserves_pruning_and_matches_bulk(spark, sf_dir, residual):
+    """Append parity law, for both codecs: staging the data in two
+    writes under a pinned training corpus yields byte-identical probe
+    results to the one-shot bulk build, and the probe plan still carries
+    the DPP subquery."""
     emb = _emb(spark, sf_dir)
-    vector_index_write(emb, "t_vx_bulk")
+    vector_index_write(emb, "t_vx_bulk", residual=residual)
     from mapreduce_spark.operators.similarity import vector_index_append
 
     vector_index_write(
-        emb.filter(F.col("vec_id") % 2 == 0), "t_vx_staged", train=emb
+        emb.filter(F.col("vec_id") % 2 == 0),
+        "t_vx_staged",
+        train=emb,
+        residual=residual,
     )
-    vector_index_append(emb.filter(F.col("vec_id") % 2 == 1), "t_vx_staged")
+    vector_index_append(
+        emb.filter(F.col("vec_id") % 2 == 1), "t_vx_staged", residual=residual
+    )
     q = emb.filter(F.col("vec_id") < N_QUERIES)
-    bulk = sorted(
-        map(tuple, vector_index_probe(spark, "t_vx_bulk", q).collect())
-    )
-    staged_probe = vector_index_probe(spark, "t_vx_staged", q)
+    bulk_probe = vector_index_probe(spark, "t_vx_bulk", q, residual=residual)
+    bulk = sorted(map(tuple, bulk_probe.collect()))
+    staged_probe = vector_index_probe(spark, "t_vx_staged", q, residual=residual)
     staged = sorted(map(tuple, staged_probe.collect()))
     assert staged == bulk and len(bulk) == N_QUERIES * TOP_K
     plan = staged_probe._jdf.queryExecution().executedPlan().toString()
@@ -132,14 +142,15 @@ def test_on_disk_residual_probe_matches_in_memory_and_prunes(spark, sf_dir):
     embeddings table's corpus side)."""
     from mapreduce_spark.operators.similarity import (
         similarity_ivfpq_adc_residual,
-        vector_index_probe_residual,
-        vector_index_write_residual,
     )
 
     emb = _emb(spark, sf_dir)
-    vector_index_write_residual(emb, "t_vindex_rsd")
-    probe = vector_index_probe_residual(
-        spark, "t_vindex_rsd", emb.filter(F.col("vec_id") < N_QUERIES)
+    vector_index_write(emb, "t_vindex_rsd", residual=True)
+    probe = vector_index_probe(
+        spark,
+        "t_vindex_rsd",
+        emb.filter(F.col("vec_id") < N_QUERIES),
+        residual=True,
     )
     on_disk = sorted(map(tuple, probe.collect()))
     in_memory = sorted(
@@ -150,10 +161,11 @@ def test_on_disk_residual_probe_matches_in_memory_and_prunes(spark, sf_dir):
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
 
-def test_compaction_collapses_cells_and_preserves_probe(spark, sf_dir):
+@CODECS
+def test_compaction_collapses_cells_and_preserves_probe(spark, sf_dir, residual):
     """After write + append every touched cell holds >= 2 files;
     compaction must collapse EVERY cell directory to exactly one file
-    while changing no probed row."""
+    while changing no probed row, for both codecs."""
     import os
 
     from mapreduce_spark.operators.similarity import (
@@ -164,9 +176,14 @@ def test_compaction_collapses_cells_and_preserves_probe(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     vector_index_write(
-        emb.filter(F.col("vec_id") % 2 == 0), "t_vindex_cpt", train=emb
+        emb.filter(F.col("vec_id") % 2 == 0),
+        "t_vindex_cpt",
+        train=emb,
+        residual=residual,
     )
-    vector_index_append(emb.filter(F.col("vec_id") % 2 == 1), "t_vindex_cpt")
+    vector_index_append(
+        emb.filter(F.col("vec_id") % 2 == 1), "t_vindex_cpt", residual=residual
+    )
     # operators hand out warehouse URIs (Hadoop-FS-safe); this test's
     # file-count inspection is deliberately local, so strip the scheme
     from urllib.parse import urlparse
@@ -186,14 +203,24 @@ def test_compaction_collapses_cells_and_preserves_probe(spark, sf_dir):
     assert max(before.values()) >= 2, before
     q = emb.filter(F.col("vec_id") < N_QUERIES)
     rows_before = sorted(
-        map(tuple, vector_index_probe(spark, "t_vindex_cpt", q).collect())
+        map(
+            tuple,
+            vector_index_probe(
+                spark, "t_vindex_cpt", q, residual=residual
+            ).collect(),
+        )
     )
     vector_index_compact(spark, "t_vindex_cpt")
     after = files_per_cell()
     assert set(after) == set(before)
     assert max(after.values()) == 1, after
     rows_after = sorted(
-        map(tuple, vector_index_probe(spark, "t_vindex_cpt", q).collect())
+        map(
+            tuple,
+            vector_index_probe(
+                spark, "t_vindex_cpt", q, residual=residual
+            ).collect(),
+        )
     )
     assert rows_before == rows_after and len(rows_after) == N_QUERIES * TOP_K
 

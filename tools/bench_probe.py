@@ -88,9 +88,14 @@ def main() -> int:
         ),
         (
             "vindex_ivfpq_adc_residual",
-            lambda: sim.vector_index_write_residual(emb, "bp_vindex_rsd"),
-            lambda: sim.vector_index_probe_residual(
-                spark, "bp_vindex_rsd", q, sim.SCALED_IVF_NPROBE, sim.TOP_K
+            lambda: sim.vector_index_write(emb, "bp_vindex_rsd", residual=True),
+            lambda: sim.vector_index_probe(
+                spark,
+                "bp_vindex_rsd",
+                q,
+                sim.SCALED_IVF_NPROBE,
+                sim.TOP_K,
+                residual=True,
             ),
         ),
         (

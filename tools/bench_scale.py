@@ -172,16 +172,16 @@ def main() -> int:
         emb = load_table(spark, d, "embeddings").select("vec_id", "embedding")
         qv = emb.filter(F.col("vec_id") < sim.N_QUERIES)
         sim.vector_index_write(emb, f"bs_vindex_{tag}")
-        sim.vector_index_write_residual(emb, f"bs_vindex_rsd_{tag}")
+        sim.vector_index_write(emb, f"bs_vindex_rsd_{tag}", residual=True)
         probes = {
             "vindex_ivfpq_adc": lambda: sim.vector_index_probe(
                 spark, f"bs_vindex_{tag}", qv,
                 sim.SCALED_IVF_NPROBE, sim.TOP_K,
             ),
             "vindex_ivfpq_adc_residual": (
-                lambda: sim.vector_index_probe_residual(
+                lambda: sim.vector_index_probe(
                     spark, f"bs_vindex_rsd_{tag}", qv,
-                    sim.SCALED_IVF_NPROBE, sim.TOP_K,
+                    sim.SCALED_IVF_NPROBE, sim.TOP_K, residual=True,
                 )
             ),
         }
