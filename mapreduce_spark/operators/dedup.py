@@ -28,15 +28,14 @@ on hs, and exact-Jaccard verification (``_pair_jaccard``) intersects hs
 sets, which equals string-set Jaccard while md5_long is injective over
 the corpus's shingles (checked by tests/test_fingerprint_pass.py). The
 DuckDB oracles keep the literal string formulation as the independent
-reference. String shingles remain only where the value depends on the
-strings themselves:
+reference. The persisted index (``minhash_index`` and its write, probe
+and compact callers) runs the same shingle_hashes -> signatures_from_bs
+-> bands_from_sig pipeline as the one-shot LSH queries. String shingles
+remain only where the value depends on the strings themselves:
 
 - the all-pairs prefix pair (``dedup_allpairs_prefix``,
   ``allpairs_prefix_stats``): the prefix order ties on the shingle
   string, and ``prefix_cand_pairs`` depends on that tie-break;
-- the persisted-index machinery (``minhash_index`` and its write,
-  probe and compact callers), which serves the index-lifecycle loop
-  unchanged;
 - the contamination and benchmark-shingle code, which matches against
   a separately derived benchmark slice.
 """
@@ -151,20 +150,27 @@ def _bs_from_hs(hsf: DataFrame) -> DataFrame:
     )
 
 
-def _pair_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+def _pair_jaccard(
+    pairs: DataFrame, sets: DataFrame, sets_b: DataFrame | None = None
+) -> DataFrame:
     """(doc_a, doc_b, jaccard): the exact set Jaccard, rounded to 6 dp
     like every oracle, of each (doc_a, doc_b) candidate pair over a
     two-column (doc_id, set) frame — the fingerprint frame's hs or, for
-    the all-pairs pair, the string shingles. The one verify join of the
-    family."""
-    doc, s = sets.columns
-    sa = sets.select(F.col(doc).alias("doc_a"), F.col(s).alias("set_a"))
-    sb = sets.select(F.col(doc).alias("doc_b"), F.col(s).alias("set_b"))
+    the all-pairs pair, the string shingles. doc_b reads ``sets_b`` when
+    given (the stored index side of ``dedup_against_index``), else
+    ``sets``. The one verify join of the family."""
+
+    def side(frame: DataFrame, x: str) -> DataFrame:
+        doc, s = frame.columns
+        return frame.select(
+            F.col(doc).alias(f"doc_{x}"), F.col(s).alias(f"set_{x}")
+        )
+
     inter = F.size(F.array_intersect("set_a", "set_b"))
     union = F.size("set_a") + F.size("set_b") - inter
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        pairs.join(side(sets, "a"), "doc_a")
+        .join(side(sets if sets_b is None else sets_b, "b"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -240,13 +246,7 @@ def base_hashes(sgl: Column) -> Column:
 
 # Band key: sig values are < 2^31, so packing ROWS_PER_BAND of them into one
 # BIGINT is bijective — equal band_hash <=> equal signature tuple, no hashing.
-def _band_hash(sig_cols: list[Column]) -> Column:
-    acc = sig_cols[0].cast("bigint")
-    for c in sig_cols[1:]:
-        acc = acc * F.lit(2_147_483_648) + c
-    return acc
-
-
+# (The Spark side is bands_from_sig's packed fold.)
 def _sql_band_hash(band: int, rows_per_band: int = ROWS_PER_BAND) -> str:
     cols = list(range(band * rows_per_band, (band + 1) * rows_per_band))
     expr = f"CAST(sig{cols[0]} AS BIGINT)"
@@ -298,7 +298,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup detection: MinHash(8 perms) -> 4 LSH bands -> bucket join ->
     exact-Jaccard verify >= 0.5.
 
-    Scale shape: signatures are per-row (no shuffle) and need ONE md5 per
+    Scale shape: signatures are per-row — signatures_from_bs's fold of 8
+    ``_minhash_sig`` columns plans no exchange — and need ONE md5 per
     shingle (permutations are two integer ops each); the bucket join
     shuffles only (band_idx, band_hash) keys, so cost tracks the number of
     TRUE near-dup candidates, not |docs|^2. At 100 TB the packed band key
@@ -307,9 +308,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One LSH pipeline serves every profile: this graded demo query IS
     fingerprint_lsh_pairs under (N_PERMS, N_BANDS) — same signature
-    entry point, same band-key rule (_band_key_fn picks the packed
-    encoding for the 2-row demo bands), same exchange-reuse pin on the
-    bucket key.
+    entry point, same band-key rule (bands_from_sig packs the 2-row demo
+    bands), and the same pipeline the persisted index (minhash_index)
+    stores.
 
     The query runs over the stored shingle-FINGERPRINT pass
     (_doc_shingle_hashes) — ONE corpus tokenize/shingle/hash scan
@@ -852,38 +853,17 @@ def minhash_index(
       at scale written as parquet bucketed by (band_idx, band_hash).
     - hashes: (doc_id, bs array<long>)       — distinct shingle hashes for
       verification; bucketed by doc_id.
-    Same signature pipeline as dedup_minhash_lsh (or the _scaled
-    variant), so index hits equal the one-shot query's candidate set
-    exactly: bands of <= 2 rows pack collision-free into one BIGINT, and
-    wider bands md5-hash the signature tuple (collisions only add
-    candidates that exact verification rejects)."""
-    rpb = n_perms // n_bands
-    sh = docs.select(
-        "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
-    ).filter(F.size("sgl") > 0)
-    hb = sh.select(
-        "doc_id", F.array_distinct(base_hashes(F.col("sgl"))).alias("bs")
+    Same fingerprint, signature and band pipeline as dedup_minhash_lsh
+    (or the _scaled variant) — shingle_hashes -> signatures_from_bs ->
+    bands_from_sig — so index hits equal the one-shot query's candidate
+    set exactly. The batch frame is read lazily (no fan-out, no
+    materialize): the probe join's only Exchange stays on the batch
+    side."""
+    bsf = _bs_from_hs(shingle_hashes(docs)).select(
+        "doc_id", F.array_distinct("bs").alias("bs")
     )
-    sig_cols = [
-        _minhash_sig(F.col("bs"), i).alias(f"sig{i}") for i in range(n_perms)
-    ]
-    sig = hb.select("doc_id", "bs", *sig_cols)
-    key_fn = _band_key_fn(rpb)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                key_fn(
-                    [F.col(f"sig{i}") for i in range(b * rpb, (b + 1) * rpb)]
-                ).alias("band_hash"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("bh")).select(
-        "doc_id", "bh.band_idx", "bh.band_hash"
-    )
-    return bands, hb.select("doc_id", "bs")
+    sig = signatures_from_bs(bsf, n_perms)
+    return bands_from_sig(sig, n_bands, n_perms // n_bands), bsf
 
 
 def dedup_against_index(
@@ -905,35 +885,20 @@ def dedup_against_index(
     re-shingled."""
     new_bands, new_hashes = minhash_index(new_docs, n_perms, n_bands)
     candidates = (
-        new_bands.select(
-            F.col("doc_id").alias("new_doc"), "band_idx", "band_hash"
-        )
+        new_bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")
         .join(
             index_bands.select(
-                F.col("doc_id").alias("old_doc"), "band_idx", "band_hash"
+                F.col("doc_id").alias("doc_b"), "band_idx", "band_hash"
             ),
             ["band_idx", "band_hash"],
         )
-        .select("new_doc", "old_doc")
-        .dropDuplicates(["new_doc", "old_doc"])
+        .select("doc_a", "doc_b")
+        .dropDuplicates(["doc_a", "doc_b"])
     )
-    na = new_hashes.select(
-        F.col("doc_id").alias("new_doc"), F.col("bs").alias("bs_new")
-    )
-    oa = index_hashes.select(
-        F.col("doc_id").alias("old_doc"), F.col("bs").alias("bs_old")
-    )
-    inter = F.size(F.array_intersect("bs_new", "bs_old"))
-    union = F.size("bs_new") + F.size("bs_old") - inter
     return (
-        candidates.join(na, "new_doc")
-        .join(oa, "old_doc")
-        .select(
-            "new_doc",
-            "old_doc",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
+        _pair_jaccard(candidates, new_hashes, index_hashes)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .toDF("new_doc", "old_doc", "jaccard")
     )
 
 
@@ -1352,9 +1317,10 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN systems) never re-shingle the corpus. Bit-identical across
     engines (md5 base hash + integer permutations). Zero shuffles: pure
     per-row array math over the fingerprint pass."""
-    return _bs_from_hs(_doc_shingle_hashes(spark, sf_dir)).select(
-        "doc_id",
-        *[_minhash_sig(F.col("bs"), i).alias(f"sig{i}") for i in range(N_PERMS)],
+    bsf = _bs_from_hs(_doc_shingle_hashes(spark, sf_dir))
+    sig = signatures_from_bs(bsf, N_PERMS)
+    return sig.select(
+        "doc_id", *[F.col("sig")[i].alias(f"sig{i}") for i in range(N_PERMS)]
     )
 
 
@@ -1423,10 +1389,6 @@ SCALED_BANDS = 36
 SCALED_ROWS_PER_BAND = SCALED_PERMS // SCALED_BANDS
 
 
-def _hashed_band_key(sig_cols: list[Column]) -> Column:
-    return md5_long(F.concat_ws("_", *[c.cast("string") for c in sig_cols]))
-
-
 def _sql_hashed_band_key(band: int, rows_per_band: int) -> str:
     cols = ", ".join(
         f"CAST(sig{i} AS VARCHAR)"
@@ -1435,19 +1397,10 @@ def _sql_hashed_band_key(band: int, rows_per_band: int) -> str:
     return md5_long_sql(f"concat_ws('_', {cols})")
 
 
-def _band_key_fn(rows_per_band: int):
-    """THE band-key encoding rule, shared by every LSH entry point
-    (one-shot queries, the persistable index, the profile-parameterized
-    pair builder): bands of <= 2 rows pack collision-free into one
-    BIGINT; wider bands md5-hash the signature tuple. One rule means a
-    stored index and any same-profile query are always key-compatible
-    (a pair builder that hardcoded the hashed key once produced
-    demo-profile buckets that differed from minhash_index's)."""
-    return _band_hash if rows_per_band <= 2 else _hashed_band_key
-
-
 def _sql_band_key(band: int, rows_per_band: int) -> str:
-    """DuckDB twin of _band_key_fn's selection."""
+    """DuckDB twin of bands_from_sig's band-key rule: bands of <= 2 rows
+    pack collision-free into one BIGINT; wider bands md5-hash the
+    signature tuple."""
     if rows_per_band <= 2:
         return _sql_band_hash(band, rows_per_band)
     return _sql_hashed_band_key(band, rows_per_band)
@@ -1496,57 +1449,28 @@ def lsh_verified_pairs(
     return _pair_jaccard(pairs, hsf).filter(F.col("jaccard") >= threshold)
 
 
-# The exploded JVM kernel below serves the demo profile (8 permutations)
-# and the Arrow kernel the production profile (144): the exploded form
-# shuffles n_perms rows per base hash, which is the dominant stage at 144
-# permutations, while 8 do not pay for an Arrow crossing. No profile in
-# between is measured; the cut sits between the two that are.
+# The per-row fold serves the demo profile (8 permutations) and the Arrow
+# kernel the production profile (144). The fold plans no exchange, but its
+# n_perms unrolled array_min(transform(...)) columns cost Catalyst analysis
+# and codegen per plan construction (~3.5 s at 144 perms), while 8 do not
+# pay for an Arrow crossing. No profile in between is measured; the cut
+# sits between the two that are.
 SIG_ARROW_MIN_PERMS = 32
 
 
 def signatures_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
     """(doc_id, sig: array<bigint>) — the perm-ordered MinHash signature
     of every (doc_id, bs) row under an arbitrary profile, the one entry
-    point every signature consumer calls. The kernel follows n_perms
-    (SIG_ARROW_MIN_PERMS); the two kernels are bit-identical, pinned
-    frame-for-frame by tests/test_bbit_minhash.py."""
+    point every signature consumer calls. Both kernels are per-row maps
+    (zero exchanges): below SIG_ARROW_MIN_PERMS the fold of n_perms
+    ``_minhash_sig`` columns, at or above it the Arrow kernel. They are
+    bit-identical, pinned frame-for-frame by tests/test_bbit_minhash.py."""
     if n_perms >= SIG_ARROW_MIN_PERMS:
         return sig_array_np_from_bs(bsf, n_perms)
-    return sig_array_from_bs(bsf, n_perms)
-
-
-def sig_array_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
-    """The exploded JVM signature kernel: explode each doc's base
-    hashes, fan every hash out to its n_perms permuted values through
-    ONE small coeff-array expression, partial-aggregate the
-    per-(doc, perm) min map-side, and reassemble. Against n_perms
-    unrolled fold columns — ~3.5 s of Catalyst analysis + codegen PER
-    PLAN CONSTRUCTION at 144 perms — and a nested
-    transform-of-transform array form that executed interpreted at
-    ~5.5 s, the exploded form runs in whole-stage codegen. Values are
-    identical (min is order-independent; per-perm arithmetic is
-    unchanged)."""
-    coeffs = "array(" + ", ".join(
-        f"named_struct('p', {i}, 'a', {a}L, 'b', {b}L)"
-        for i, (a, b) in ((i, _perm_coeffs(i)) for i in range(n_perms))
-    ) + ")"
-    hbe = bsf.select("doc_id", F.explode("bs").alias("h"))
-    pv = hbe.select(
+    bs = F.col("bs")
+    return bsf.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform({coeffs}, c -> "
-                f"named_struct('perm', c.p, 'v', (c.a * h + c.b) % {MINHASH_P}))"
-            )
-        ).alias("t"),
-    ).groupBy("doc_id", F.col("t.perm").alias("perm")).agg(
-        F.min("t.v").alias("mh")
-    )
-    return pv.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("perm", "mh"))),
-            lambda e: e["mh"],
-        ).alias("sig")
+        F.array(*[_minhash_sig(bs, i) for i in range(n_perms)]).alias("sig"),
     )
 
 
@@ -1554,16 +1478,16 @@ MH_NP_SLAB = 1 << 16  # rows of the (hashes x perms) fan-out per slab
 
 
 def sig_array_np_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
-    """The Arrow signature kernel: sig_array_from_bs as an
-    Arrow-batched int64 fan-out (mapInPandas) instead of the explode +
-    per-(doc, perm) hash-agg plan — bit-identical signatures: the
-    permutation is the same (a*h + b) mod P in exact int64 arithmetic
-    (a, h < P = 2^31-1 keeps a*h < 2^62).
+    """The Arrow signature kernel: the per-row fold of
+    ``signatures_from_bs`` as an Arrow-batched int64 fan-out
+    (mapInPandas) — bit-identical signatures: the permutation is the
+    same (a*h + b) mod P in exact int64 arithmetic (a, h < P = 2^31-1
+    keeps a*h < 2^62).
 
-    Why it exists: the exploded form shuffles |shingle hashes| x
-    n_perms rows into the per-(doc, perm) min — at the production
-    144-perm profile that is 144x the base-hash row volume through one
-    exchange, the dominant stage of every scaled-profile consumer.
+    Why it exists: at the production 144-perm profile the fold's 144
+    unrolled columns cost seconds of Catalyst analysis and codegen per
+    plan construction, and an exploded (hash x perm) plan shuffles 144x
+    the base-hash row volume through one exchange.
     lsh_buckets_np's sibling: a dense integer map-reduce is the one
     shape the built-in operators can only express as a row explosion.
     Here the fan-out never leaves its partition: per document it is a
@@ -1613,13 +1537,13 @@ def minhash_bands(hsf: DataFrame, n_perms: int, n_bands: int) -> DataFrame:
 def bands_from_sig(sig: DataFrame, n_bands: int, rpb: int) -> DataFrame:
     """(doc_id, band_idx, band_hash) from an ARBITRARY (doc_id, sig:
     array<bigint>) signature frame — the band-key encoding shared by the
-    k-perm and OPH tiers (_band_key_fn's rule): bands of <= 2 rows pack
+    k-perm and OPH tiers and the persisted index: bands of <= 2 rows pack
     collision-free into one BIGINT (requires slot values < 2^31 — true
     for k-perm minima; OPH's 2^34-wide slots always ride the hashed
     path at its 4-row geometry); wider bands md5-hash the '_'-joined
     decimal tuple."""
     if rpb <= 2:
-        # packed key: fold from 0 gives ((0*2^31+s0)*2^31+s1) = _band_hash
+        # packed key: fold from 0 gives ((0*2^31+s0)*2^31+s1) = _sql_band_hash
         key = (
             f"aggregate(slice(sig, b * {rpb} + 1, {rpb}), "
             "cast(0 as bigint), (acc, v) -> acc * 2147483648 + v)"
@@ -2618,7 +2542,7 @@ def fingerprint_oph_pairs(hsf: DataFrame) -> DataFrame:
     """OPH-signature LSH near-dup pairs of a fingerprint frame at the
     production geometry: {OPH_BINS} densified slots -> {SCALED_BANDS}
     bands of {OPH_ROWS_PER_BAND} -> hashed band keys (slots are 34-bit,
-    so the 4-row band always rides _band_key_fn's md5 path) -> capped
+    so the 4-row band always rides bands_from_sig's md5 path) -> capped
     bucket join -> exact verify >= JACCARD_THRESHOLD."""
     bands = bands_from_sig(
         _oph_sig_from_bs(_bs_from_hs(hsf)), SCALED_BANDS, OPH_ROWS_PER_BAND

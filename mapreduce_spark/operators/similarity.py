@@ -341,7 +341,7 @@ def _pack_sign_bucket(planes: int) -> Column:
 def lsh_buckets(emb: DataFrame, planes: int, tables: int) -> DataFrame:
     """(vec_id, table_idx, bucket) under an arbitrary (planes, tables)
     geometry — THE bucket derivation every LSH entry point shares (the
-    dedup _band_key_fn discipline: one rule, so any two same-profile
+    dedup bands_from_sig discipline: one rule, so any two same-profile
     consumers are always key-compatible)."""
     return _lsh_dots(emb, planes, tables).select(
         "vec_id", F.col("table_idx").cast("int").alias("table_idx"),

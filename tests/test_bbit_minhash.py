@@ -9,6 +9,9 @@ the b-bit correction).
 
 from __future__ import annotations
 
+import pytest
+
+from mapreduce_spark.operators import dedup
 from mapreduce_spark.operators.dedup import (
     BBIT_NIBBLE,
     BBIT_PER_WORD,
@@ -19,36 +22,46 @@ from mapreduce_spark.operators.dedup import (
     _doc_shingle_hashes,
     bbit_jaccard_report,
     minhash_bbit_signatures,
-    sig_array_from_bs,
     sig_array_np_from_bs,
+    signatures_from_bs,
 )
+
+
+def per_row_sigs(bsf, n_perms):
+    """signatures_from_bs's per-row fold kernel at any n_perms (the
+    kernel is chosen when the frame is built, so lifting the Arrow cut
+    for the call is enough)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "SIG_ARROW_MIN_PERMS", n_perms + 1)
+        return signatures_from_bs(bsf, n_perms)
 
 
 def test_numpy_signature_derivation_is_bit_identical(spark, sf_dir):
     """sig_array_np_from_bs (the Arrow-batched fan-out every scaled-
     profile consumer derives signatures through) must produce EXACTLY
-    the same (doc_id, sig) frame as the exploded JVM kernel — same base
-    hashes, same (a*h + b) mod P int64 arithmetic — at both graded
-    profiles, so band keys, b-bit words and agreement counts can never
-    diverge between the two kernels signatures_from_bs picks from."""
+    the same (doc_id, sig) frame as the per-row fold of _minhash_sig
+    columns — same base hashes, same (a*h + b) mod P int64 arithmetic —
+    at both graded profiles, so band keys, b-bit words and agreement
+    counts can never diverge between the two kernels signatures_from_bs
+    picks from."""
     bsf = _bs_from_hs(_doc_shingle_hashes(spark, sf_dir))
     for n_perms in (N_PERMS, SCALED_PERMS):
-        jvm = {
+        fold = {
             r["doc_id"]: list(r["sig"])
-            for r in sig_array_from_bs(bsf, n_perms).collect()
+            for r in per_row_sigs(bsf, n_perms).collect()
         }
         npy = {
             r["doc_id"]: list(r["sig"])
             for r in sig_array_np_from_bs(bsf, n_perms).collect()
         }
-        assert jvm and jvm == npy, n_perms
+        assert fold and fold == npy, n_perms
 
 
 def test_packing_roundtrips_to_the_nibble_vector(spark, sf_dir):
     bsf = _bs_from_hs(_doc_shingle_hashes(spark, sf_dir))
     sig = {
         r["doc_id"]: r["sig"]
-        for r in sig_array_from_bs(bsf, SCALED_PERMS).collect()
+        for r in per_row_sigs(bsf, SCALED_PERMS).collect()
     }
     # bbit_sig ships as the '_'-joined word string (driver-canon-safe);
     # split('_') must recover the exact packed words

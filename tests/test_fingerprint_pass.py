@@ -10,7 +10,9 @@ value-preserving:
    band keys are bit-identical to the oracles' string derivation;
 2. hash-set Jaccard, document frequency and first occurrence equal their
    string-set values (md5_long injectivity over the distinct shingles of
-   every text the family hashes — checked directly).
+   every text the family hashes — checked directly);
+3. the persisted index's stored hash sets (minhash_index) equal the
+   distinct base hashes of the string shingles, in element order.
 
 The row-for-row comparison of every consumer against its DuckDB oracle
 is tests/test_dedup_oracle_parity.py.
@@ -27,6 +29,7 @@ from mapreduce_spark.operators.dedup import (
     _doc_shingle_hashes,
     _doc_shingles,
     base_hashes,
+    minhash_index,
 )
 from mapreduce_spark.operators.textops import scrub_expr
 from mapreduce_spark.sources.tables import load_table
@@ -40,6 +43,17 @@ def test_fingerprint_base_hashes_bit_identical(spark, sf_dir):
     sh = _doc_shingles(spark, sf_dir)
     ref = sh.select("doc_id", base_hashes(F.col("sgl")).alias("bs"))
     got = _bs_from_hs(_doc_shingle_hashes(spark, sf_dir))
+    assert _rows(got, ["doc_id", "bs"]) == _rows(ref, ["doc_id", "bs"])
+
+
+def test_index_hashes_match_string_base_hashes(spark, sf_dir):
+    """minhash_index stores array_distinct(hs % P) from shingle_hashes;
+    the string reference is array_distinct(base_hashes(sgl)). Lists are
+    compared as lists, so element order is pinned too."""
+    ref = _doc_shingles(spark, sf_dir).select(
+        "doc_id", F.array_distinct(base_hashes(F.col("sgl"))).alias("bs")
+    )
+    _, got = minhash_index(load_table(spark, sf_dir, "documents"))
     assert _rows(got, ["doc_id", "bs"]) == _rows(ref, ["doc_id", "bs"])
 
 

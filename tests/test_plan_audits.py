@@ -486,8 +486,10 @@ def test_arrow_integer_kernels_stay_inside_scan_partitions(spark, sf_dir):
     fan-out and the LSH hyperplane bucket matmul) exist to DELETE the
     row-explosion exchange their JVM twins pay — so their output frames
     must plan with ZERO exchanges: scan -> per-row projection ->
-    mapInPandas, nothing shuffles before or inside the kernel."""
+    mapInPandas, nothing shuffles before or inside the kernel. The
+    demo profile's per-row fold is a map as well: zero exchanges."""
     from mapreduce_spark.operators.dedup import (
+        N_PERMS,
         SCALED_PERMS,
         _bs_from_hs,
         shingle_hashes,
@@ -503,6 +505,11 @@ def test_arrow_integer_kernels_stay_inside_scan_partitions(spark, sf_dir):
     sig = signatures_from_bs(bsf, SCALED_PERMS)
     assert audit.exchange_count(sig) == 0, audit.simple_plan(sig)
     assert "InPandas" in audit.simple_plan(sig)
+    # the 8-perm profile's per-row fold stays in the JVM and shuffles
+    # nothing either
+    sig8 = signatures_from_bs(bsf, N_PERMS)
+    assert audit.exchange_count(sig8) == 0, audit.simple_plan(sig8)
+    assert "InPandas" not in audit.simple_plan(sig8)
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"

@@ -83,7 +83,7 @@ def typed_mismatch(s_pdf, d_pdf) -> list[str]:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from mapreduce_spark.registry import get_oracles, get_queries
     from mapreduce_spark.session import get_spark
 

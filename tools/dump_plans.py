@@ -8,11 +8,12 @@ Queries whose construction is execute-on-call (training loops, index
 writes) still produce a plan for the RETURNED DataFrame; the eager part
 is documented in OPTIMIZATION notes instead.
 
-Expression IDs (``#123``), exchange/broadcast ids (``plan_id=45``) and the
-ids of checkpointed RDDs (``MapPartitionsRDD[24]``) are session counters,
-not plan structure: they are masked to ``#x``, ``plan_id=x`` and ``RDD[x]``
-so dumps of the same plan taken in different sessions, or
-before and after a refactor, diff cleanly.
+Expression IDs (``#123``), exchange/broadcast ids (``plan_id=45``), the
+ids of checkpointed RDDs (``MapPartitionsRDD[24]``) and the numeric suffix
+of higher-order-function lambda variables (``x_57``) are JVM or session
+counters, not plan structure: they are masked to ``#x``, ``plan_id=x``,
+``RDD[x]`` and ``x_N`` so dumps of the same plan taken in different
+sessions, or before and after a refactor, diff cleanly.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ def main() -> int:
         plan = re.sub(r"#\d+", "#x", physical_plan(df))
         plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
         plan = re.sub(r"RDD\[\d+\]", "RDD[x]", plan)
+        plan = re.sub(r"lambda (\w+?)_\d+\b", r"lambda \1_N", plan)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -11,6 +11,7 @@ Usage: python tools/schema_sweep.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import types as T
@@ -25,7 +26,7 @@ def non_scalar_cols(schema: T.StructType) -> list[str]:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from mapreduce_spark.registry import get_queries
     from mapreduce_spark.session import get_spark
 
