@@ -910,9 +910,11 @@ def dedup_against_index(
 # equivalent is a BUCKETED parquet table keyed on the probe join's keys,
 # so every future probe reads the corpus side shuffle-free (Spark plans
 # Exchange only on the incoming-batch side — asserted by
-# tests/test_index_lifecycle.py). Appends preserve the bucket spec, so
-# the index self-accumulates across ingests without ever rewriting.
-INDEX_BUCKETS = 16  # local-scale; size to ~total executor cores in prod
+# tests/test_index_lifecycle.py). Appends insert under the stored bucket
+# spec, so the index self-accumulates across ingests without ever
+# rewriting. A new index gets one bucket per session core
+# (defaultParallelism): a probe scans the index in that many tasks and
+# each ingest writes at most that many files per write task.
 
 
 def minhash_index_write(
@@ -920,16 +922,19 @@ def minhash_index_write(
     name: str,
     n_perms: int = N_PERMS,
     n_bands: int = N_BANDS,
-    buckets: int = INDEX_BUCKETS,
+    buckets: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Persist (or, with mode='append', fold into) the on-disk MinHash
     index ``name`` for a (doc_id, text) corpus: bands bucketed+sorted on
     the probe key (band_idx, band_hash) as table ``{name}_bands``, shingle
     hash sets bucketed on the verification key doc_id as
-    ``{name}_hashes``. Each append writes one file per bucket — the
-    production ingest pattern (periodic compaction is an OPTIMIZE-style
-    rewrite, not a correctness requirement).
+    ``{name}_hashes``. ``buckets`` (default: the session's cores) applies
+    when the tables are created; an append inserts under the bucket spec
+    the stored table already has, so one index never mixes layouts, and
+    writes at most one file per (write task, bucket) — the production
+    ingest pattern (periodic compaction is an OPTIMIZE-style rewrite,
+    not a correctness requirement).
 
     Torn-state note (ADVICE r12): the two table writes run CONCURRENTLY
     (artifacts.run_concurrently), so a mid-ingest failure can leave
@@ -937,9 +942,10 @@ def minhash_index_write(
     is the same as for any partial ingest under mode='append': re-run
     the SAME ingest idempotently after a compaction
     (minhash_index_compact rewrites both tables from the surviving
-    band/hash rows), or rebuild with mode='overwrite', which cleans
-    state unconditionally. Probes never return wrong matches from a
-    torn index — a band row without its hash rows can only ADD a
+    band/hash rows, and replaces the live tables only after the
+    compacted copy is complete), or rebuild with mode='overwrite', which
+    cleans state unconditionally. Probes never return wrong matches from
+    a torn index — a band row without its hash rows can only ADD a
     candidate that exact-verification then rejects against the intact
     side; a hash row without band rows is simply never probed."""
     bands, hashes = minhash_index(docs, n_perms, n_bands)
@@ -951,75 +957,83 @@ def _write_index_tables(
     name: str,
     bands: DataFrame,
     hashes: DataFrame,
-    buckets: int,
+    buckets: int | None,
     mode: str,
 ) -> None:
-    if mode == "overwrite":
-        from mapreduce_spark.sources.fs import drop_table
+    from mapreduce_spark.operators.artifacts import run_concurrently
+    from mapreduce_spark.sources.fs import drop_table
 
-        for suffix in ("bands", "hashes"):
-            drop_table(spark, f"{name}_{suffix}")
+    buckets = buckets or spark.sparkContext.defaultParallelism
+
+    def writer(df: DataFrame, suffix: str, *keys: str):
+        table = f"{name}_{suffix}"
+        if mode == "append" and spark.catalog.tableExists(table):
+            # insertInto writes under the STORED bucket spec (and is
+            # positional, hence the select in table column order)
+            cols = spark.table(table).columns
+            return lambda: df.select(*cols).write.insertInto(table)
+        if mode == "overwrite":
+            drop_table(spark, table)
+        return lambda: (
+            df.write.mode(mode)
+            .format("parquet")
+            .bucketBy(buckets, *keys)
+            .sortBy(*keys)
+            .saveAsTable(table)
+        )
+
     # the two table writes share no dependency: overlap them so the
     # hashes job back-fills the bands job's straggler tail (guide §2.6;
     # A/B-measured in the r12 optimization round, OPTIMIZATION_r12.md)
-    from mapreduce_spark.operators.artifacts import run_concurrently
-
     run_concurrently(
-        lambda: (
-            bands.write.mode(mode)
-            .format("parquet")
-            .bucketBy(buckets, "band_idx", "band_hash")
-            .sortBy("band_idx", "band_hash")
-            .saveAsTable(f"{name}_bands")
-        ),
-        lambda: (
-            hashes.write.mode(mode)
-            .format("parquet")
-            .bucketBy(buckets, "doc_id")
-            .sortBy("doc_id")
-            .saveAsTable(f"{name}_hashes")
-        ),
+        writer(bands, "bands", "band_idx", "band_hash"),
+        writer(hashes, "hashes", "doc_id"),
     )
 
 
 def minhash_index_compact(
-    spark: SparkSession, name: str, buckets: int = INDEX_BUCKETS
+    spark: SparkSession, name: str, buckets: int | None = None
 ) -> None:
     """OPTIMIZE-style maintenance rewrite: every ingest leaves a file
     per (write task, bucket), so after K ingests each probe task opens
-    >= K files. Compaction spools the index to a temporary plain-parquet
-    copy (severing it from the tables about to be dropped) and rewrites
-    it fresh — the fresh bucketed write gets Spark's planned-write
-    distribution (one task per bucket, one file per bucket; a
-    localCheckpoint input defeats that planning, measured 2+ files per
-    bucket), same rows, same bucket spec, so probe plans and results are
+    >= K files. Compaction writes the index afresh BESIDE the live
+    tables, as ``{name}__compact_{bands,hashes}``, and only once both
+    are complete drops each live table and renames its compacted twin
+    into place (the catalog moves the managed directory), so a failed
+    rewrite leaves the live index as it was. The input is repartitioned
+    on the bucket keys, so each write task holds whole buckets and
+    writes one file per bucket (``buckets``, default: the session's
+    cores). Same rows, same bucket keys, so probe plans and results are
     untouched (dedup_index_compacted grades exactly that). Pure
     maintenance, never required for correctness."""
-    from mapreduce_spark.sources.fs import fs_delete, fs_mkdtemp
+    from mapreduce_spark.sources.fs import drop_table
 
-    spool = fs_mkdtemp(spark, f"compact_{name}")
+    buckets = buckets or spark.sparkContext.defaultParallelism
+    staged = f"{name}__compact"
+    # read the live files BY PATH: over the bucketed table itself the
+    # optimizer drops the repartition (the bucketing already satisfies
+    # it) and then disables the bucketed scan, so the write would emit
+    # one file per (input file, bucket)
+    bands, hashes = (
+        spark.read.schema(t.schema).parquet(*t.inputFiles())
+        for t in minhash_index_read(spark, name)
+    )
     try:
-        bands, hashes = minhash_index_read(spark, name)
-        bands.write.mode("overwrite").parquet(f"{spool}/bands")
-        hashes.write.mode("overwrite").parquet(f"{spool}/hashes")
-        # repartition on the bucket keys so each write task holds whole
-        # buckets (the bucketed V1 write only sorts within tasks — it
-        # does not redistribute, so an unaligned input writes one file
-        # per task x bucket)
         _write_index_tables(
             spark,
-            name,
-            spark.read.parquet(f"{spool}/bands").repartition(
-                buckets, "band_idx", "band_hash"
-            ),
-            spark.read.parquet(f"{spool}/hashes").repartition(
-                buckets, "doc_id"
-            ),
+            staged,
+            bands.repartition(buckets, "band_idx", "band_hash"),
+            hashes.repartition(buckets, "doc_id"),
             buckets,
             "overwrite",
         )
-    finally:
-        fs_delete(spark, spool)
+    except BaseException:
+        for suffix in ("bands", "hashes"):
+            drop_table(spark, f"{staged}_{suffix}")
+        raise
+    for suffix in ("bands", "hashes"):
+        drop_table(spark, f"{name}_{suffix}")
+        spark.sql(f"ALTER TABLE {staged}_{suffix} RENAME TO {name}_{suffix}")
 
 
 @register("dedup_index_compacted", oracle=_INCR_SQL)
@@ -1059,13 +1073,16 @@ def minhash_index_attach(
     name: str,
     bands_location: str,
     hashes_location: str,
-    buckets: int = INDEX_BUCKETS,
+    buckets: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Re-attach an index written by a PREVIOUS session: Spark's default
     in-memory catalog scopes table metadata to one session, but the
     bucket layout is carried by the files themselves (bucket-id file
     suffixes), so an external CLUSTERED BY table over the old location
-    restores shuffle-free probes without rewriting a byte."""
+    restores shuffle-free probes without rewriting a byte. ``buckets``
+    must be the count the index was written with (default: the
+    session's cores, minhash_index_write's default)."""
+    buckets = buckets or spark.sparkContext.defaultParallelism
     # DROP only: drop_table would delete files this may be attaching
     spark.sql(f"DROP TABLE IF EXISTS {name}_bands")
     spark.sql(f"DROP TABLE IF EXISTS {name}_hashes")

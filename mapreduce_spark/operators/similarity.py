@@ -3517,6 +3517,9 @@ def _exact_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rank_topk(l2, score="d2", desc=False).select("query_id", "vec_id")
 
 
+_MSE_DEN = EMB_DIM * 100_000_000  # d2 sums are in 1e-8 units per dim
+
+
 def _pq_code_card(best: DataFrame) -> DataFrame:
     """(vec_id, pq_code, quant_mse) from a (vec_id, sub_idx, packed)
     argmin frame, with pq_code emitted as the '_'-joined code STRING
@@ -3525,7 +3528,13 @@ def _pq_code_card(best: DataFrame) -> DataFrame:
     array cells (CORRECTNESS_r07: embedding_pq_codes_opq ERR), so every
     graded output must be scalar. The encoding is bijective with the
     code vector — base-PQ_PACK digits joined in sub_idx order — and
-    costs nothing at scale (string build is row-local JVM work)."""
+    costs nothing at scale (string build is row-local JVM work).
+
+    quant_mse = S / D rounded half-up to 6 decimals, S the code's summed
+    sub-space d2 and D = EMB_DIM * 1e8, computed as the exact integer
+    (2*S*1e6 + D) div (2*D) over 1e6: a double round() lands on either
+    side of a sixth-decimal tie depending on the engine (S <= 2.3e11,
+    so 2*S*1e6 stays far inside BIGINT)."""
     return best.groupBy("vec_id").agg(
         F.concat_ws(
             "_",
@@ -3534,23 +3543,26 @@ def _pq_code_card(best: DataFrame) -> DataFrame:
                 lambda e: (e["packed"] % PQ_PACK).cast("string"),
             ),
         ).alias("pq_code"),
-        F.round(
-            F.sum(F.expr(f"packed div {PQ_PACK}")).cast("double")
-            / (EMB_DIM * 100_000_000),
-            6,
+        (
+            F.expr(
+                f"(sum(packed div {PQ_PACK}) * 2000000 + {_MSE_DEN}) "
+                f"div {2 * _MSE_DEN}"
+            ).cast("double")
+            / 1_000_000
         ).alias("quant_mse"),
     )
 
 
 # Oracle-side twin of _pq_code_card's tail: string_agg joins the codes in
-# sub_idx order with the same '_' separator the Spark side uses.
+# sub_idx order with the same '_' separator the Spark side uses, and
+# quant_mse takes the same exact integer rounding.
 def _sql_pq_code_tail(best_cte: str) -> str:
     return f"""
     SELECT vec_id,
            string_agg(CAST(packed % {PQ_PACK} AS VARCHAR),
                       '_' ORDER BY sub_idx) AS pq_code,
-           round(CAST(sum(packed // {PQ_PACK}) AS DOUBLE)
-                 / (CAST({EMB_DIM} AS BIGINT) * 100000000), 6) AS quant_mse
+           CAST((sum(packed // {PQ_PACK}) * 2000000 + {_MSE_DEN})
+                // {2 * _MSE_DEN} AS DOUBLE) / 1000000 AS quant_mse
     FROM {best_cte} GROUP BY vec_id"""
 
 
@@ -3578,7 +3590,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     float32); sub-space L2^2 distances are pure BIGINT sums; the argmin
     packs (d2, seed_id) into ONE integer so the min aggregate IS the
     tie-broken argmin — no float compare anywhere; the reported MSE is
-    one identical double division.
+    rounded in exact integer arithmetic (_pq_code_card).
 
     Scale shape: the codebook is |seeds| x {EMB_DIM} rows, BROADCAST;
     vectors explode to (vec, sub, pos) once, the distance aggregate and
@@ -5862,6 +5874,15 @@ def _vindex_codes_path(spark: SparkSession, name: str) -> str:
     return f"{warehouse_uri(spark)}/{name}_codes"
 
 
+def _read_codes(spark: SparkSession, path: str) -> DataFrame:
+    """The cid-partitioned codes at ``path`` under their known schema
+    (exactly what partition inference yields), so opening them runs no
+    schema-inference job."""
+    return spark.read.schema(
+        "vec_id BIGINT, pq_code ARRAY<INT>, cid INT"
+    ).parquet(path)
+
+
 def vector_index_write(
     emb: DataFrame,
     name: str,
@@ -5993,7 +6014,7 @@ def vector_index_probe(
     entries but the cid-partitioned codes are read by path alone."""
     cent = spark.table(f"{name}_centroids")
     book = spark.table(f"{name}_book")
-    codes = spark.read.parquet(codes_path or _vindex_codes_path(spark, name))
+    codes = _read_codes(spark, codes_path or _vindex_codes_path(spark, name))
     qn = queries.withColumn("nrm", norm(F.col("embedding"))).select(
         F.col("vec_id").alias("query_id"), "embedding", "nrm"
     )
@@ -6159,32 +6180,33 @@ def vector_index_compact(spark: SparkSession, name: str) -> None:
     cid-partitioned code layout (minhash_index_compact's sibling): every
     vector_index_append leaves new files in each touched cell's
     directory, so after K ingests a probe of a cell opens up to K+1
-    files. Compaction spools the codes to a temporary plain copy
-    (severing the read from the directory about to be overwritten) and
-    rewrites them repartitioned ON cid — each write task holds whole
-    cells, so every cell directory collapses back to one file. Same
-    rows, same partition layout, so probe plans (dynamic partition
+    files. Compaction rewrites the codes repartitioned ON cid to a
+    sibling directory — each write task holds whole cells, so every
+    cell directory collapses back to one file — and only once that copy
+    is complete deletes the live directory and renames the copy into
+    its place, so a failed rewrite leaves the live index as it was.
+    Same rows, same partition layout, so probe plans (dynamic partition
     pruning off the broadcast route) and results are untouched. Pure
     maintenance, never required for correctness; the stored quantizer
     and book are not touched."""
-    from mapreduce_spark.sources.fs import fs_delete, fs_mkdtemp
+    from mapreduce_spark.sources.fs import fs_delete, fs_rename
 
     path = _vindex_codes_path(spark, name)
-    spool = fs_mkdtemp(spark, f"vcompact_{name}")
+    staged = f"{path}__compact"
     try:
-        spark.read.parquet(path).write.mode("overwrite").parquet(
-            f"{spool}/codes"
-        )
-        fs_delete(spark, path)
         (
-            spark.read.parquet(f"{spool}/codes")
+            _read_codes(spark, path)
             .repartition("cid")
             .write.partitionBy("cid")
             .mode("overwrite")
-            .parquet(path)
+            .parquet(staged)
         )
-    finally:
-        fs_delete(spark, spool)
+    except BaseException:
+        fs_delete(spark, staged)
+        raise
+    fs_delete(spark, path)
+    if not fs_rename(spark, staged, path):
+        raise OSError(f"could not rename {staged} to {path}")
 
 
 @register("similarity_index_compacted", oracle=_IVFPQ_ADC_SQL)

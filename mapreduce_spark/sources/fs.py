@@ -1,10 +1,10 @@
 """Warehouse filesystem maintenance via the Hadoop FileSystem API.
 
-Index/table maintenance (dropping a stale table directory, spooling a
-temporary copy during compaction) must not assume a POSIX local disk: on
-a real deployment the warehouse lives on HDFS or an object store, where
-driver-side ``shutil`` against a ``urlparse().path`` is simply wrong.
-Every path here goes through ``org.apache.hadoop.fs.Path`` +
+Index/table maintenance (dropping a stale table directory, swapping a
+compacted copy in place of the live one) must not assume a POSIX local
+disk: on a real deployment the warehouse lives on HDFS or an object
+store, where driver-side ``shutil`` against a ``urlparse().path`` is
+simply wrong. Every path here goes through ``org.apache.hadoop.fs.Path`` +
 ``Path.getFileSystem`` — the exact same code works for ``file://``,
 ``hdfs://`` and ``s3a://`` URIs alike, and the returned paths stay in
 URI form so Spark reads/writes resolve them on the same filesystem.
@@ -15,7 +15,6 @@ URI form so Spark reads/writes resolve them on the same filesystem.
 
 from __future__ import annotations
 
-import uuid
 from typing import NamedTuple
 
 from pyspark.sql import SparkSession
@@ -70,11 +69,11 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def fs_mkdtemp(spark: SparkSession, prefix: str) -> str:
-    """A fresh scratch directory ON THE WAREHOUSE FILESYSTEM (compaction
-    spools must live where the data lives: a local tempfile.mkdtemp
-    would silently route an S3 table's spool through one driver disk)."""
-    path = f"{warehouse_uri(spark)}/_spool_{prefix}_{uuid.uuid4().hex[:12]}"
-    fs, p = _fs_and_path(spark, path)
-    fs.mkdirs(p)
-    return path
+def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
+    """``FileSystem.rename`` of ``src`` to ``dst`` (same filesystem).
+    ``dst`` must not exist: Hadoop moves ``src`` INTO an existing
+    directory instead of replacing it. False if the filesystem reports
+    that the rename failed."""
+    fs, p = _fs_and_path(spark, src)
+    _, q = _fs_and_path(spark, dst)
+    return bool(fs.rename(p, q))

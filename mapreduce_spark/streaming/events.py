@@ -1336,8 +1336,8 @@ def stream_scd2_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = batch_df.sparkSession
         delta = batch_df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         ups = scd2_apply_delta(s.table("scd2s_open"), delta)
-        # sever from the open table before overwriting it (the
-        # vector_index_compact read-severing rule)
+        # sever from the open table before overwriting it: the
+        # overwrite deletes the files a lazy read of it still scans
         ups = ups.localCheckpoint(eager=True)
         ups.filter(~F.col("is_current")).write.mode("append").saveAsTable(
             "scd2s_closed"
@@ -1462,8 +1462,8 @@ def stream_scd2_view_with_deletes(
             tombstone=SCD2_TOMBSTONE,
             closed_seeds=tomb,
         )
-        # sever from the open/tomb tables before overwriting them (the
-        # vector_index_compact read-severing rule)
+        # sever from the open/tomb tables before overwriting them: the
+        # overwrite deletes the files a lazy read of them still scans
         ups = ups.localCheckpoint(eager=True)
         ups.filter(~F.col("is_current")).write.mode("append").saveAsTable(
             "scd2d_closed"

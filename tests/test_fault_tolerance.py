@@ -12,14 +12,17 @@ the scenario cannot share the suite's session-scoped Spark.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 import pyspark.sql.functions as F
@@ -68,7 +71,7 @@ print("FAULT_TOLERANCE_OK")
 @pytest.mark.seal
 def test_task_failure_is_reexecuted_like_a_dead_worker():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, ROOT],
         capture_output=True,
         text=True,
         timeout=300,

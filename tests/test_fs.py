@@ -12,21 +12,28 @@ from urllib.parse import urlparse
 from mapreduce_spark.sources.fs import (
     fs_delete,
     fs_exists,
-    fs_mkdtemp,
+    fs_rename,
     warehouse_uri,
 )
 
 
-def test_mkdtemp_exists_delete_roundtrip(spark):
-    path = fs_mkdtemp(spark, "fs_unit")
-    assert path.startswith(warehouse_uri(spark))
-    assert fs_exists(spark, path)
-    # the scratch dir is real on the underlying store
+def test_rename_exists_delete_roundtrip(spark):
+    """fs_rename moves a whole directory on the warehouse filesystem —
+    the swap step of both index compactions."""
     import os
 
-    assert os.path.isdir(urlparse(path).path)
-    assert fs_delete(spark, path) is True
-    assert not fs_exists(spark, path)
+    src = f"{warehouse_uri(spark)}/fs_unit_rename_src"
+    dst = f"{warehouse_uri(spark)}/fs_unit_rename_dst"
+    for p in (src, dst):
+        fs_delete(spark, p)
+    spark.range(3).write.parquet(src)
+    assert fs_rename(spark, src, dst) is True
+    assert not fs_exists(spark, src) and fs_exists(spark, dst)
+    # the moved directory is real on the underlying store and still reads
+    assert os.path.isdir(urlparse(dst).path)
+    assert sorted(r.id for r in spark.read.parquet(dst).collect()) == [0, 1, 2]
+    assert fs_delete(spark, dst) is True
+    assert not fs_exists(spark, dst)
 
 
 def test_delete_of_absent_path_is_noop(spark):
@@ -34,13 +41,3 @@ def test_delete_of_absent_path_is_noop(spark):
     assert not fs_exists(spark, ghost)
     # shutil.rmtree(ignore_errors=True) semantics: absent -> False, no raise
     assert fs_delete(spark, ghost) is False
-
-
-def test_two_mkdtemps_never_collide(spark):
-    a = fs_mkdtemp(spark, "fs_unit2")
-    b = fs_mkdtemp(spark, "fs_unit2")
-    try:
-        assert a != b and fs_exists(spark, a) and fs_exists(spark, b)
-    finally:
-        fs_delete(spark, a)
-        fs_delete(spark, b)

@@ -23,7 +23,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from mapreduce_spark.operators.dedup import (
-    INDEX_BUCKETS,
     dedup_against_index,
     dedup_incremental,
     minhash_index,
@@ -100,7 +99,7 @@ def test_reattach_preserves_rows_and_bucketing(spark, sf_dir):
         "t_idx_reborn",
         f"{warehouse}/t_idx_attach_bands",
         f"{warehouse}/t_idx_attach_hashes",
-        buckets=INDEX_BUCKETS,
+        buckets=spark.sparkContext.defaultParallelism,
     )
     assert bands.count() == before
     new_bands, _ = minhash_index(docs.filter(F.col("doc_id") % 2 == 1))
@@ -196,6 +195,7 @@ def test_compaction_restores_single_file_buckets(spark, sf_dir):
     holds); compaction must rewrite to at most one file per bucket with
     identical rows and an unchanged single-Exchange probe plan."""
     import glob
+    import os
 
     from mapreduce_spark.operators.dedup import minhash_index_compact
     from mapreduce_spark.sources.tables import load_table
@@ -212,11 +212,19 @@ def test_compaction_restores_single_file_buckets(spark, sf_dir):
     rows_before = sorted(
         map(tuple, spark.table("t_idx_cpt_bands").collect())
     )
-    minhash_index_compact(spark, "t_idx_cpt", buckets=INDEX_BUCKETS)
+    buckets = spark.sparkContext.defaultParallelism
+    minhash_index_compact(spark, "t_idx_cpt", buckets=buckets)
     n_after = len(glob.glob(f"{warehouse}/t_idx_cpt_bands/part-*"))
-    assert n_after <= INDEX_BUCKETS < n_before, (n_before, n_after)
+    assert n_after <= buckets < n_before, (n_before, n_after)
     bands, _ = minhash_index_read(spark, "t_idx_cpt")
     assert sorted(map(tuple, bands.collect())) == rows_before
+    # the compacted copy was swapped in: nothing staged is left behind
+    left = [
+        d
+        for d in os.listdir(warehouse)
+        if "t_idx_cpt" in d and ("__compact" in d or "_spool_" in d)
+    ]
+    assert left == [], left
     new_bands, _ = minhash_index(docs.filter(F.col("doc_id") % 2 == 1))
     probe = new_bands.join(
         bands.withColumnRenamed("doc_id", "old_doc"),
@@ -226,3 +234,83 @@ def test_compaction_restores_single_file_buckets(spark, sf_dir):
         probe._jdf.queryExecution().executedPlan().toString().count("Exchange")
         == 1
     )
+
+
+def test_append_keeps_the_created_bucket_count(spark, split_pair_docs):
+    """An index created with N buckets keeps N after an append that
+    passes no count: the append inserts under the stored bucket spec
+    (DESCRIBE and the files' bucket ids agree), so one index never mixes
+    layouts whatever the appending session's default."""
+    import re
+
+    n = spark.sparkContext.defaultParallelism + 1
+    minhash_index_write(
+        split_pair_docs.filter("doc_id IN (100, 105)"), "t_idx_nb", buckets=n
+    )
+    files_before = {
+        s: set(spark.table(f"t_idx_nb_{s}").inputFiles())
+        for s in ("bands", "hashes")
+    }
+    minhash_index_write(
+        split_pair_docs.filter("doc_id IN (101, 103)"), "t_idx_nb", mode="append"
+    )
+    for suffix in ("bands", "hashes"):
+        table = f"t_idx_nb_{suffix}"
+        desc = {
+            r.col_name: r.data_type
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        }
+        assert desc["Num Buckets"] == str(n), desc
+        files = set(spark.table(table).inputFiles())
+        assert files > files_before[suffix]
+        # file names carry the bucket id: part-..._00002.c000.snappy.parquet
+        ids = {int(re.search(r"_(\d{5})\.c\d{3}", f).group(1)) for f in files}
+        assert ids <= set(range(n)), ids
+    bands, _ = minhash_index_read(spark, "t_idx_nb")
+    assert {r.doc_id for r in bands.select("doc_id").distinct().collect()} == {
+        100,
+        101,
+        103,
+        105,
+    }
+
+
+def test_failed_compaction_keeps_live_index(spark, sf_dir, monkeypatch):
+    """A compaction whose rewrite fails must leave the live index as it
+    was: same stored rows, same probe result, no staged tables left."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mapreduce_spark.operators.dedup import minhash_index_compact
+    from mapreduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    minhash_index_write(docs.filter(F.col("doc_id") % 4 == 0), "t_idx_cfail")
+    minhash_index_write(
+        docs.filter(F.col("doc_id") % 4 == 2), "t_idx_cfail", mode="append"
+    )
+    batch = docs.filter(F.col("doc_id") % 2 == 1)
+
+    def state():
+        bands, hashes = minhash_index_read(spark, "t_idx_cfail")
+        return (
+            sorted(map(tuple, bands.collect())),
+            sorted(map(tuple, hashes.collect())),
+            sorted(map(tuple, dedup_against_index(batch, bands, hashes).collect())),
+        )
+
+    before = state()
+    save = DataFrameWriter.saveAsTable
+
+    def failing_save(self, name, *args, **kwargs):
+        if name.startswith("t_idx_cfail_"):
+            raise RuntimeError(f"injected write failure: {name}")
+        return save(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", failing_save)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        minhash_index_compact(spark, "t_idx_cfail")
+    monkeypatch.undo()
+    assert state() == before
+    assert not [
+        t.name for t in spark.catalog.listTables() if "t_idx_cfail__" in t.name
+    ]

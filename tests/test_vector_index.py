@@ -214,6 +214,13 @@ def test_compaction_collapses_cells_and_preserves_probe(spark, sf_dir, residual)
     after = files_per_cell()
     assert set(after) == set(before)
     assert max(after.values()) == 1, after
+    # the compacted copy was swapped in: nothing staged is left behind
+    left = [
+        d
+        for d in os.listdir(os.path.dirname(path))
+        if "t_vindex_cpt" in d and ("__compact" in d or "_spool_" in d)
+    ]
+    assert left == [], left
     rows_after = sorted(
         map(
             tuple,
@@ -259,3 +266,70 @@ def test_attached_index_serves_identically_and_prunes(spark, sf_dir):
     )
     plan = attached._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:2000]
+
+
+def test_probe_construction_launches_no_job(spark, sf_dir):
+    """Opening the stored codes reads them under their known schema:
+    building the probe DataFrame runs no Spark job (no schema-inference
+    pass over the code files)."""
+    emb = _emb(spark, sf_dir)
+    vector_index_write(emb, "t_vindex_nojob")
+    q = emb.filter(F.col("vec_id") < N_QUERIES)
+    sc = spark.sparkContext
+    sc.setJobGroup("vindex-probe-construct", "vindex-probe-construct")
+    try:
+        probe = vector_index_probe(spark, "t_vindex_nojob", q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("vindex-probe-construct") == []
+    assert len(probe.collect()) == N_QUERIES * TOP_K
+
+
+def test_failed_compaction_keeps_live_index(spark, sf_dir, monkeypatch):
+    """A compaction whose rewrite fails must leave the live codes as they
+    were: same stored rows, same probe result, no staged copy left."""
+    import os
+    from urllib.parse import urlparse
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mapreduce_spark.operators.similarity import (
+        _vindex_codes_path,
+        vector_index_append,
+        vector_index_compact,
+    )
+
+    emb = _emb(spark, sf_dir)
+    vector_index_write(
+        emb.filter(F.col("vec_id") % 2 == 0), "t_vindex_cfail", train=emb
+    )
+    vector_index_append(emb.filter(F.col("vec_id") % 2 == 1), "t_vindex_cfail")
+    path = _vindex_codes_path(spark, "t_vindex_cfail")
+    q = emb.filter(F.col("vec_id") < N_QUERIES)
+
+    def state():
+        return (
+            sorted(map(tuple, spark.read.parquet(path).collect())),
+            sorted(map(tuple, vector_index_probe(spark, "t_vindex_cfail", q).collect())),
+        )
+
+    before = state()
+    write = DataFrameWriter.parquet
+
+    def failing_write(self, target, *args, **kwargs):
+        if str(target).startswith(path):
+            raise RuntimeError(f"injected write failure: {target}")
+        return write(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        vector_index_compact(spark, "t_vindex_cfail")
+    monkeypatch.undo()
+    assert state() == before
+    local = urlparse(path).path
+    assert [
+        d
+        for d in os.listdir(os.path.dirname(local))
+        if d.startswith(os.path.basename(local) + "__")
+    ] == []
